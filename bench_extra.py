@@ -20,15 +20,11 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import BENCH_QUERIES  # noqa: E402
 from eoreader_spark import datagen  # noqa: E402
 from eoreader_spark.operators import assign, stencil  # noqa: E402
 from eoreader_spark.session import get_spark  # noqa: E402
 from eoreader_spark.sources import pyscan  # noqa: E402
-
-BENCH_QUERIES = [
-    "pricing_summary", "join_revenue", "cell_assign", "pip_window",
-    "knn", "topk_window", "tumbling_window", "token_count",
-]
 
 
 def noop(df) -> None:

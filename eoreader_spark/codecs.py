@@ -98,9 +98,13 @@ def _plane_base(h: int, w: int) -> tuple[np.ndarray, np.ndarray]:
     """Seed-independent terms of pixel_plane, cached per (h, w) — the mgrid
     and the two integer grids dominated the per-image generator cost (r9
     profile); image dims cycle over a handful of sizes, so the cache is
-    tiny and every cached term is exact integer math (bit-identical)."""
+    tiny and every cached term is exact integer math (bit-identical).  The
+    grids are shared by every caller, so they are read-only."""
     y, x = np.mgrid[0:h, 0:w]
-    return x * 13 + y * 17, (x * y) % 29
+    grids = x * 13 + y * 17, (x * y) % 29
+    for g in grids:
+        g.flags.writeable = False
+    return grids
 
 
 def make_image(seed: int, h: int, w: int, planes: int = PLANES) -> np.ndarray:

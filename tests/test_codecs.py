@@ -26,6 +26,14 @@ def test_pixel_fn_is_closed_form():
     assert img[1, 5, 9] == (3 * 7 + 1 * 31 + 9 * 13 + 5 * 17 + (9 * 5) % 29) % 256
 
 
+def test_cached_pixel_grids_are_read_only():
+    for grid in codecs._plane_base(64, 64):
+        with pytest.raises(ValueError, match="read-only"):
+            grid += 1
+    img = codecs.make_image(3, 64, 64)  # the cached grids are intact
+    assert img[1, 5, 9] == (3 * 7 + 1 * 31 + 9 * 13 + 5 * 17 + (9 * 5) % 29) % 256
+
+
 def test_png_decoder_handles_filters():
     # decoder must handle every spec filter (None/Sub/Up/Average/Paeth),
     # not just our encoder's filter 0

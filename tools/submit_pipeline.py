@@ -32,16 +32,18 @@ def main() -> int:
                     help="test hook: exit(1) after this stage commits")
     args = ap.parse_args()
 
+    from eoreader_spark import pipelines
+    from eoreader_spark.session import worker_daemon_conf
+
     spark = (
         SparkSession.builder.appName("eoreader_spark_pipeline")
         .config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(map=worker_daemon_conf())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    from eoreader_spark import pipelines
 
     out = pipelines.run_pipeline(
         spark, args.root, args.n_images, die_after=args.die_after
