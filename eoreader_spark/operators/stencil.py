@@ -127,56 +127,6 @@ def _strip_rows(
     ).select("image_id", "tile_x", "tile_y", "dir", "strip")
 
 
-def padded_tiles(
-    tiles: DataFrame, tile: int = TILE, partitioned: bool = False
-) -> DataFrame:
-    """Strips-only halo exchange + JVM assembly -> (key, _pad) rows where
-    _pad is the flat (T+2)^2 padded array (NaN outside the image).
-
-    Edge strips (~6% of a 64^2 tile) are extracted with codegen'd
-    slice/element_at expressions, pivoted to 8 halo columns by a hash
-    aggregate (map-side combined), equi-joined onto the center tiles, and
-    the padded array is CONCATENATED JVM-SIDE (flatten/transform) — no
-    Python and no Arrow anywhere in the halo path.
-
-    Pass ``partitioned=True`` when ``tiles`` is already hash-distributed on
-    (image_id, tile_x, tile_y) — bucketed at rest, or repartitioned once by
-    the caller and shared across several stencils (Spark then reuses that
-    exchange and only the strips move per op).
-    """
-    import pyspark.sql.functions as F
-
-    t = tile
-    centers = tiles if partitioned else tiles.repartition(*_KEY)
-    # strips derive from the RAW input (not the repartitioned centers): the
-    # groupBy below shuffles them to their target tiles anyway.
-    strips = _strip_rows(tiles, tile)
-    # strips-only exchange: pivot to one halo row per target tile.  Strips
-    # addressed outside the image drop out in the inner-ness of the left join.
-    halos = strips.groupBy(*_KEY).agg(
-        *[
-            F.max(F.when(F.col("dir") == c, F.col("strip"))).alias(c)
-            for c in _DIR_COLS.values()
-        ]
-    )
-    joined = centers.join(halos, _KEY, "left")
-
-    nan1 = "cast('NaN' as float)"
-    nan_row = f"array_repeat({nan1}, {t})"
-    pad_expr = (
-        "concat("
-        f" coalesce(h_nw, array({nan1})), coalesce(h_top, {nan_row}),"
-        f" coalesce(h_ne, array({nan1})),"
-        f" flatten(transform(sequence(0, {t - 1}), i -> concat("
-        f"   array(coalesce(element_at(h_left, i + 1), {nan1})),"
-        f"   slice(px, i * {t} + 1, {t}),"
-        f"   array(coalesce(element_at(h_right, i + 1), {nan1}))))),"
-        f" coalesce(h_sw, array({nan1})), coalesce(h_bot, {nan_row}),"
-        f" coalesce(h_se, array({nan1})))"
-    )
-    return joined.select(*_KEY, F.expr(pad_expr).alias("_pad"))
-
-
 def halo_rows(
     tiles: DataFrame,
     tile: int = TILE,
@@ -362,35 +312,6 @@ def center_kernel(pad: np.ndarray) -> np.ndarray:
     a fused apply_stencil_multi pass for free (e.g. DEM next to SLOPE)."""
     t = pad.shape[0] - 2
     return pad[1 : t + 1, 1 : t + 1]
-
-
-def _nb(dy: int, dx: int, t: int) -> str:
-    """1-based flat index into _pad for the neighbour (dy,dx) of output
-    pixel k (k in 0..T*T-1, row-major)."""
-    return (
-        f"cast(((k div {t}) + 1 + {dy}) * {t + 2} + (k % {t}) + 1 + {dx} + 1 as int)"
-    )
-
-
-def apply_stencil_expr(
-    tiles: DataFrame,
-    px_expr: str,
-    tile: int = TILE,
-    out_col: str = "px",
-    partitioned: bool = False,
-    cast_float: bool = True,
-) -> DataFrame:
-    """All-JVM stencil: ``px_expr`` is a SQL expression over `k` (output
-    pixel index) and `_pad` (the padded array) evaluated inside
-    transform(sequence(...)) — whole-stage codegen end to end, no Arrow.
-    Use _nb(dy,dx,tile) to address neighbours."""
-    import pyspark.sql.functions as F
-
-    t = tile
-    padded = padded_tiles(tiles, tile, partitioned)
-    body = f"cast(({px_expr}) as float)" if cast_float else px_expr
-    out = f"transform(sequence(0, {t * t - 1}), k -> {body})"
-    return padded.select(*_KEY, F.expr(out).alias(out_col))
 
 
 def morton_key(x_col, y_col):
@@ -715,41 +636,6 @@ def gap_fill_xy(
     return _gap_fill(tiles, fill, tile, px_col)
 
 
-def _grad_struct_expr(t: int) -> str:
-    """Per-pixel gradient struct (gx, gy) as ONE transform pass — binding
-    the gradients in an intermediate struct array so downstream kernels
-    don't re-evaluate the 10-element_at neighbourhood per reference
-    (central differences, NaN borders fall back to the center value — same
-    semantics as the numpy kernels)."""
-    C = f"element_at(_pad, {_nb(0, 0, t)})"
-    R = f"nanvl(element_at(_pad, {_nb(0, 1, t)}), {C})"
-    L = f"nanvl(element_at(_pad, {_nb(0, -1, t)}), {C})"
-    D = f"nanvl(element_at(_pad, {_nb(1, 0, t)}), {C})"
-    U = f"nanvl(element_at(_pad, {_nb(-1, 0, t)}), {C})"
-    return (
-        f"transform(sequence(0, {t * t - 1}), k ->"
-        f" struct(cast((({R}) - ({L})) / 2.0 as double) as gx,"
-        f"        cast((({D}) - ({U})) / 2.0 as double) as gy))"
-    )
-
-
-def slope_expr_kernel(dem_tiles: DataFrame, tile: int = TILE, partitioned: bool = False) -> DataFrame:
-    """All-JVM slope variant (no Python anywhere).  MEASURED SLOWER than the
-    numpy kernel on this workload: Spark higher-order-function lambdas are
-    interpreted per element (not whole-stage codegen), ~1us/pixel vs numpy's
-    ~10ns/pixel — see BENCH.md round-2 stencil table.  Kept as the zero-Arrow
-    reference implementation and for environments without Python workers."""
-    import pyspark.sql.functions as F
-
-    grads = _grad_struct_expr(tile)
-    expr = (
-        f"transform({grads}, g ->"
-        " cast(degrees(atan(sqrt(g.gx * g.gx + g.gy * g.gy))) as float))"
-    )
-    padded = padded_tiles(dem_tiles, tile, partitioned)
-    return padded.select(*_KEY, F.expr(expr).alias("px"))
-
-
 def slope(
     dem_tiles: DataFrame,
     tile: int = TILE,
@@ -757,9 +643,9 @@ def slope(
     block: int | None = None,
 ) -> DataFrame:
     """W2: dem tile rows (px = z) -> slope degrees.  Vectorized numpy kernel
-    over the JVM-assembled flat pad (strips-only shuffle; one flat float
-    array per tile crosses Arrow — with the 512-row Arrow batches set in
-    session.py this is the fastest measured configuration, BENCH.md).
+    over the numpy-assembled pad (strips-only shuffle, see halo_rows; the
+    tile and its flat halo cross Arrow once — with the 512-row Arrow batches
+    set in session.py this is the fastest measured configuration, BENCH.md).
     ``block=B`` routes through the block-cooperative path (multi-executor
     scale design; bit-identical outputs)."""
     if block:

@@ -6,11 +6,12 @@ allocator — measured on this box, a 32-thread local JVM moves the same 400 MB
 of image bytes 10-20x SLOWER than an 8-thread one (narrow columns scale
 perfectly; only large var-binary columns invert).  Production executors run
 4-8 cores per JVM and rarely hit this, but the right architecture at any
-scale is: the JVM plans and distributes SPLITS (file + row-group ranges,
-narrow rows), and each Python task reads its own split with pyarrow —
-data-local, zero JVM byte-shuffling, exactly how a C++/Rust scan operator
-would behave.  This is the engine's S3-scan analog
-(/root/reference/eoreader/utils.py:137-239 windowed rasterio read).
+scale is: the driver plans SPLITS (file + row-group ranges), the JVM runs
+one wave of tasks (one per core) over a ``spark.range`` of split ids, and
+each Python task reads its own block of splits with pyarrow — data-local,
+zero JVM byte-shuffling, no exchange, exactly how a C++/Rust scan operator
+would behave.  This is the engine's S3-scan analog (EOReader's windowed
+rasterio read in ``eoreader/utils.py``).
 
 Pruning: row-group splits carry parquet min/max stats, so predicate pushdown
 on split columns happens at plan time (driver), and column pruning happens in
@@ -94,42 +95,38 @@ def scan(
     kernel: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
     columns: list[str] | None = None,
-    partitions: int | None = None,
     predicate: tuple[str, object, object] | None = None,
 ) -> DataFrame:
-    """Distribute parquet splits; each Python task reads its split locally
+    """Distribute parquet splits; each Python task reads its splits locally
     and applies ``kernel`` (batch DataFrame -> batch DataFrame).  An
     optional ``predicate`` range prunes row groups at plan time (see
     parquet_splits); the kernel still sees every row of surviving groups."""
     splits = parquet_splits(path, predicate=predicate)
-    n_part = partitions or max(1, min(len(splits), 256))
-    # r9 (guide §2.5): keyless ROUND-ROBIN repartition, not a hash
-    # repartition on (file, rg0).  Hashing K split keys into K partitions
-    # leaves ~1/e of the tasks empty and stacks 2-4 splits on others (the
-    # synthetic-key collision problem) — with seconds-long decode per split
-    # the stacked tasks were the stage stragglers (measured: 2-3x stage
-    # tail).  Round-robin distributes exactly evenly; the input is a
-    # deterministic driver-local list and Spark's sort-before-repartition
-    # keeps the row->partition assignment stable under task retry.
-    # (A parallelize()-sliced RDD was measured too: balanced, but its
-    # Python-RDD scan pays a ~1.4s cold worker path — the JVM local-rows
-    # relation + one round-robin exchange is faster cold and warm.)
-    sdf = spark.createDataFrame(splits or [], "file string, rg0 int, rg1 int")
-    sdf = sdf.repartition(n_part)
+    # One wave of tasks, no exchange: ``spark.range`` hands each of n tasks
+    # a contiguous block of split ids (balanced to +-1 split) and the
+    # closure maps an id back to its split.  A Python task costs ~70-80 ms
+    # of fixed overhead against ~9 ms of decode + index work per 8-image
+    # split, so one task per core beats one task per split (BENCH.md
+    # "pyscan one wave").  Trade-off: one wave cannot rebalance unequal
+    # splits; for equal splits the critical path is ceil(S/cores)
+    # split-times either way.  The id -> split mapping is a pure function
+    # of the driver-side list, so a retried task re-reads the same splits.
+    n = max(1, min(len(splits), spark.sparkContext.defaultParallelism))
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            for file, rg0, rg1 in zip(pdf["file"], pdf["rg0"], pdf["rg1"]):
+            for i in pdf["id"]:
+                file, rg0, rg1 = splits[i]
                 pf = pq.ParquetFile(file)
-                if int(rg1) < 0:
+                if rg1 < 0:
                     table = pf.read(columns=columns)
                 else:
-                    table = pf.read_row_groups(list(range(int(rg0), int(rg1))), columns=columns)
+                    table = pf.read_row_groups(list(range(rg0, rg1)), columns=columns)
                 out = kernel(table.to_pandas())
                 if out is not None and len(out):
                     yield out
 
-    return sdf.mapInPandas(run, schema=schema)
+    return spark.range(0, len(splits), 1, n).mapInPandas(run, schema=schema)
 
 
 def index_stats_scan(

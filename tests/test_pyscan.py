@@ -78,3 +78,51 @@ def test_rowgroup_stats_pruning(spark, tmp_path):
 
     with _pytest.raises(KeyError):
         pyscan.parquet_splits(f"{out}.parquet", predicate=("nope", 0, 1))
+
+
+def _plan(df) -> str:
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_scan_is_one_wave_without_exchange(spark, tmp_path):
+    """The split source is a spark.range with one task per core (capped by
+    the split count): no Exchange, and every split read exactly once even
+    when the split count is not a multiple of the task count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "rg21.parquet")
+    ids = np.arange(21 * 10, dtype=np.int64)
+    pq.write_table(pa.table({"k": ids, "v": ids * 7}), path, row_group_size=10)
+    splits = pyscan.parquet_splits(path)
+    assert len(splits) == 21
+
+    df = pyscan.scan(spark, path, lambda pdf: pdf, "k long, v long")
+    cores = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() == min(len(splits), cores)
+    rows = sorted((r.k, r.v) for r in df.collect())
+    assert "Exchange" not in _plan(df)  # the executed (final) plan
+    ref = pq.read_table(path)
+    assert rows == sorted(zip(ref["k"].to_pylist(), ref["v"].to_pylist()))
+
+    few = pyscan.scan(spark, path, lambda pdf: pdf, "k long, v long", predicate=("k", 0, 25))
+    assert few.rdd.getNumPartitions() == min(3, cores)
+    assert sorted(r.k for r in few.collect()) == list(range(30))
+
+
+def test_scan_fully_pruned_is_empty_with_schema(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "sorted.parquet")
+    ids = np.arange(200, dtype=np.int64)
+    pq.write_table(pa.table({"k": ids, "v": ids}), path, row_group_size=50)
+    df = pyscan.scan(spark, path, lambda pdf: pdf, "k long, v long", predicate=("k", 1000, None))
+    assert df.collect() == []
+    assert df.schema.simpleString() == "struct<k:bigint,v:bigint>"

@@ -10,6 +10,8 @@ n-independent (same operators/exchanges), which is what the files document.
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import shutil
 import sys
@@ -19,21 +21,18 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import BENCH_QUERIES  # noqa: E402
 from eoreader_spark import datagen  # noqa: E402
 from eoreader_spark.operators import assign, stencil  # noqa: E402
 from eoreader_spark.session import get_spark  # noqa: E402
 from eoreader_spark.sources import pyscan  # noqa: E402
 
-BENCH_QUERIES = [
-    "pricing_summary", "join_revenue", "cell_assign", "pip_window",
-    "knn", "topk_window", "tumbling_window", "token_count",
-]
-
 
 def fmt_plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
 
 def main() -> None:
