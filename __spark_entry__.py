@@ -163,8 +163,8 @@ def q_pip_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 kNN: ring-expand + refine + brute fallback (exact), top-3 neighbours
-    for 20 query points among all event points."""
+    """J4 kNN: ring-expand + refine + full-cover residue pass (exact), top-3
+    neighbours for 20 query points among all event points."""
     from eoreader_spark.operators import knn
 
     # deterministic dedup of co-located points: keep the smallest event_id.
@@ -174,7 +174,11 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle each time (24-Exchange plan, plans/r09/knn_before.txt); cached
     # it is computed once per run and every downstream leg reads the
     # in-memory projection (~16 B/row — bounded by the distinct-point count,
-    # spills to disk beyond memory like any MEMORY_AND_DISK cache)
+    # spills to disk beyond memory like any MEMORY_AND_DISK cache).
+    # NB: intentionally not unpersisted — the returned lazy plan references
+    # the cache; the ContextCleaner reclaims the blocks when the consumer
+    # releases the DataFrame (the same lifetime contract as knn_join's
+    # persisted pass 1)
     pts = (
         _events_points(spark, sf_dir)
         .groupBy("lon", "lat")
@@ -190,13 +194,13 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identical to the DuckDB oracle (libm cos differs in the last ulp).
     # k_cells=2 (r9, measured): at k_cells=1 pass 1 left a 4-query residue at
     # sf0.1, so the full-cover guarantee pass actually executed its
-    # 4489-cell explode join; one ring wider resolves every query at every
+    # explode join; one ring wider resolves every query at every
     # test SF and AQE collapses pass 2 to empty (results identical BY
     # CONSTRUCTION at any k_cells — the two-phase exactness guarantee is
     # unchanged and still covers distributions where a residue remains).
     out = knn.knn_join(
         queries, pts, k=3, res=5, k_cells=2, q_id="query_id", p_id="image_id",
-        coslat=False, two_phase=True,
+        coslat=False,
     )
     return out.select(
         "query_id", F.col("image_id").alias("neighbor_id"), F.round(F.col("dist"), 6).alias("d2"), "rank"

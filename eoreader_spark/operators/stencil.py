@@ -233,41 +233,22 @@ def assemble_pads_multi(
     return pads
 
 
-def assemble_pads(pdf: pd.DataFrame, t: int, px_col: str = "px", halo: int = 1) -> np.ndarray:
-    """Single-band pad assembly (see assemble_pads_multi)."""
-    return assemble_pads_multi(pdf, t, (px_col,), halo)[px_col]
-
-
 def apply_stencil(
     tiles: DataFrame,
     kernel: Callable[[np.ndarray], np.ndarray],
     tile: int = TILE,
-    out_col: str = "px",
     partitioned: bool = False,
     halo: int = 1,
 ) -> DataFrame:
     """Generic halo stencil with a PYTHON kernel (X3 extension point):
-    kernel((T+2w,T+2w) padded) -> (T,T).  Strips-only shuffle; the flat halo
-    column joins the center tiles JVM-side, and the pad assembles in numpy
-    inside the one Arrow pass (see halo_rows for why).  ``halo``=1 serves
-    3x3 kernels, 3 the 7x7 refined Lee."""
-    t = tile
-    joined = halo_rows(tiles, tile, partitioned, halo=halo)
-    schema = f"image_id string, tile_x int, tile_y int, {out_col} array<float>"
-
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pads = assemble_pads(pdf, t, halo=halo)
-            out_px = [
-                kernel(pads[i]).astype(np.float32).ravel() for i in range(len(pdf))
-            ]
-            out = pdf[["image_id", "tile_x", "tile_y"]].copy()
-            out[out_col] = out_px
-            yield out
-
-    return joined.mapInPandas(batch, schema=schema)
+    kernel((T+2w,T+2w) padded) -> (T,T) over the ``px`` band.  The
+    one-kernel case of apply_stencil_multi: strips-only shuffle, the flat
+    halo column joins the center tiles JVM-side, and the pad assembles in
+    numpy inside the one Arrow pass (see halo_rows for why).  ``halo``=1
+    serves 3x3 kernels, 3 the 7x7 refined Lee."""
+    return apply_stencil_multi(
+        tiles, {"px": ("px", kernel)}, tile=tile, partitioned=partitioned, halo=halo
+    )
 
 
 def apply_stencil_multi(

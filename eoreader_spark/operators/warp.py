@@ -371,9 +371,9 @@ def geocode_bilinear_lut(
     # grid points outside the (slightly eps-padded) swath bbox can never
     # produce an in-cell (u, v) and are dropped BEFORE the kNN anchor.
     # This is the scale win for the real shape of the problem (global tile
-    # grid x narrow swath strip): far queries otherwise drive the kNN
-    # ring-doubling toward its full-cover cap, paying many shuffle rounds
-    # for rows the in-cell filter discards anyway.  One plan-sized agg
+    # grid x narrow swath strip): far queries otherwise fall through the
+    # kNN ring into its full-cover residue pass, where every swath point
+    # is their candidate, for rows the in-cell filter discards anyway.  One plan-sized agg
     # (4 doubles) -> JVM filter; result rows are identical by construction.
     bb_row = s0.agg(
         F.min(F.col("lon").cast("double")), F.max(F.col("lon").cast("double")),

@@ -143,35 +143,64 @@ def test_extent_and_footprint(spark, tables):
         assert len(ring) >= 4
 
 
-def test_knn_matches_brute_force(spark, tables):
+def _pass1_resolved(queries, points, k, res, k_cells):
+    """Queries resolved by knn_join's first ring pass alone."""
+    from eoreader_spark.operators.knn import _ring_pass
+
+    q = queries.withColumn("qcell", cells.encode_expr("lon", "lat", res))
+    p = points.select("image_id", "lon", "lat").withColumn(
+        "pcell", cells.encode_expr("lon", "lat", res)
+    )
+    exact = _ring_pass(q, p, k, res, k_cells, "query_id", "image_id", True)
+    return exact.select("query_id").distinct().count()
+
+
+@pytest.mark.parametrize("res,k_cells", [(5, 2), (5, 1), (7, 1), (9, 1)])
+def test_knn_matches_brute_force(spark, tables, res, k_cells):
+    """Exact at every (res, k_cells); at res=9, k_cells=1 the first ring
+    leaves a residue, so the coarse full-cover pass really runs."""
     scenes = tables["scenes"]
     queries = scenes.limit(10).selectExpr("image_id as query_id", "lon", "lat")
-    got = knn.knn_join(queries, scenes, k=3, res=5, k_cells=2).collect()
+    got = knn.knn_join(queries, scenes, k=3, res=res, k_cells=k_cells).collect()
     want = knn.knn_brute(queries, scenes, k=3).collect()
     gk = {(r.query_id, r.rank): r.image_id for r in got}
     wk = {(r.query_id, r.rank): r.image_id for r in want}
     assert gk == wk
+    if res == 9:
+        assert _pass1_resolved(queries, scenes, 3, res, k_cells) < 10
+
+
+def test_knn_full_cover_pass_stays_coarse(spark, tables):
+    """The residue pass covers the whole grid at the coarse resolution 3
+    (ring radius 8, <= 128 cells), never at the query resolution: a
+    full-cover ring at res=9 is radius 512, ~524k cells per leftover query.
+    Read from the analyzed plan — optimization folds the literal
+    sequence(-K, K) into an array constant."""
+    import re
+
+    scenes = tables["scenes"]
+    queries = scenes.limit(10).selectExpr("image_id as query_id", "lon", "lat")
+    df = knn.knn_join(queries, scenes, k=3, res=9, k_cells=1)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    radii = [int(m) for m in re.findall(r"sequence\(-(\d+), \1\b", plan)]
+    assert radii and max(radii) == 1 << 3
 
 
 def test_knn_ring_widening_mostly_unresolved(spark, tables):
     """VERDICT round-1 scale fix: when the first ring resolves under half the
-    queries (k too large for one ring at fine resolution), the doubled-ring
-    retries — not a whole-table brute pass — must still give exact top-k."""
+    queries (k too large for one ring at fine resolution), the full-cover
+    residue pass — not a whole-table brute pass — must still give exact
+    top-k."""
     scenes = tables["scenes"]
     queries = scenes.limit(20).selectExpr("image_id as query_id", "lon", "lat")
-    # res=9 cells are tiny; k=8 needs many neighbours -> round 1 resolves few
-    got = knn.knn_join(queries, scenes, k=8, res=9, k_cells=1, rounds=3).collect()
+    # res=9 cells are tiny; k=8 needs many neighbours -> ring 1 resolves few
+    got = knn.knn_join(queries, scenes, k=8, res=9, k_cells=1).collect()
     want = knn.knn_brute(queries, scenes, k=8).collect()
     gk = {(r.query_id, r.rank): r.image_id for r in got}
     wk = {(r.query_id, r.rank): r.image_id for r in want}
     assert gk == wk
     # and the first ring really is mostly unresolved (the premise holds)
-    from eoreader_spark.operators.knn import _ring_pass, _with_cell
-
-    q = _with_cell(queries, "lon", "lat", 9, "qcell")
-    p = _with_cell(scenes.select("image_id", "lon", "lat"), "lon", "lat", 9, "pcell")
-    exact = _ring_pass(q, p, 8, 9, 1, "query_id", "image_id", True)
-    assert exact.select("query_id").distinct().count() < 10  # >50% unresolved
+    assert _pass1_resolved(queries, scenes, 8, 9, 1) < 10  # >50% unresolved
 
 
 def test_knn_no_resolved_set_broadcast_hint(spark, tables):
@@ -180,11 +209,11 @@ def test_knn_no_resolved_set_broadcast_hint(spark, tables):
     on the anti-join input in the optimized logical plan."""
     scenes = tables["scenes"]
     queries = scenes.limit(10).selectExpr("image_id as query_id", "lon", "lat")
-    df = knn.knn_join(queries, scenes, k=3, res=7, k_cells=1, rounds=2)
+    df = knn.knn_join(queries, scenes, k=3, res=7, k_cells=1)
     logical = df._jdf.queryExecution().optimizedPlan().toString()
-    # the only broadcast hint allowed is knn_brute's residual-tail query side
+    # no broadcast hint at all: the resolved-id set is query-scale
     joins = [ln for ln in logical.splitlines() if "Join LeftAnti" in ln]
-    assert joins, "anti-join rounds missing from plan"
+    assert joins, "residue anti-join missing from plan"
     for ln in joins:
         assert "broadcast" not in ln.lower()
 
@@ -354,22 +383,10 @@ def test_vantor_member_layouts_and_gains(spark):
     assert pan_eng.has_band("PAN") and not pan_eng.has_band("RED")
 
 
-def test_knn_lazy_mode_exact(spark, tables):
-    """adaptive=False: the fully lazy single-action plan (no probes, no
-    persists) must still be exact."""
-    scenes = tables["scenes"]
-    queries = scenes.limit(10).selectExpr("image_id as query_id", "lon", "lat")
-    got = knn.knn_join(queries, scenes, k=3, res=5, k_cells=1, adaptive=False).collect()
-    want = knn.knn_brute(queries, scenes, k=3).collect()
-    gk = {(r.query_id, r.rank): r.image_id for r in got}
-    wk = {(r.query_id, r.rank): r.image_id for r in want}
-    assert gk == wk
-
-
 def test_knn_never_resolving_rings_terminate_without_brute(spark, tables):
     """Round-2 VERDICT #9: with fewer points than k, NO ring pass can ever
-    satisfy the >=k-hits test — rounds=None must still terminate via the
-    full-cover terminal pass (exact by construction) and the plan must not
+    satisfy the >=k-hits test — the join must still resolve through the
+    full-cover residue pass (exact by construction) and the plan must not
     contain a broadcast nested-loop brute (the old unbounded fallback)."""
     scenes = tables["scenes"]
     points = scenes.limit(2)  # fewer points than k=5 -> rings never resolve
@@ -384,19 +401,20 @@ def test_knn_never_resolving_rings_terminate_without_brute(spark, tables):
     assert gk == wk  # exact top-(n_points) per query, rank <= 2
 
 
-def test_knn_finite_rounds_oversized_residue_keeps_widening(spark, tables):
-    """Finite rounds with brute_limit=0: every residue counts as 'too big to
-    broadcast', so the join must reach exactness through ring-doubling alone
-    (no knn_brute / no broadcast of the residue)."""
+def test_knn_residue_resolves_without_brute(spark, tables):
+    """A residue left by the first ring at res=8 must reach exactness
+    through the full-cover pass alone (no knn_brute / no broadcast of the
+    residue)."""
     scenes = tables["scenes"]
     queries = scenes.limit(12).selectExpr("image_id as query_id", "lon", "lat")
-    df = knn.knn_join(queries, scenes, k=6, res=8, k_cells=1, rounds=1, brute_limit=0)
+    df = knn.knn_join(queries, scenes, k=6, res=8, k_cells=1)
     physical = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in physical
     got = {(r.query_id, r.rank): r.image_id for r in df.collect()}
     want = {(r.query_id, r.rank): r.image_id
             for r in knn.knn_brute(queries, scenes, k=6).collect()}
     assert got == want
+    assert _pass1_resolved(queries, scenes, 6, 8, 1) < 12  # a residue exists
 
 
 def test_footprint_centroid_is_polygon_centroid(spark):

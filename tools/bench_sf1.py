@@ -100,14 +100,14 @@ def run_scale(spark, workdir: str, n_images: int, n_docs: int) -> dict:
         rates[f"{k}_docs_per_sec"] = n_docs / t[k]
 
     # --- iterative / ANN family (round-7 VERDICT #3): operators whose
-    # scale behavior is governed by ring-ladder depth and bucket occupancy,
+    # scale behavior is governed by kNN residue size and bucket occupancy,
     # which the decode/assign/stencil/dedup stages above cannot see ---
     from pyspark.sql import functions as F
 
     from eoreader_spark.operators import dedup as _dd
     from eoreader_spark.operators import knn, similarity, warp
 
-    # knn_join: fixed query count, corpus scales — ladder depth must not
+    # knn_join: fixed query count, corpus scales — residue size must not
     n_q = 256
     pts = datagen.gen_scenes(spark, n_images).select("image_id", "lon", "lat").persist()
     pts.count()
