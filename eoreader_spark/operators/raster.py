@@ -82,7 +82,6 @@ def jp2_scene_tiles(
     plane: int = 0,
     max_res: int | None = None,
     parallelism: int | None = None,
-    partition_mode: str = "range",
 ) -> DataFrame:
     """Tile-parallel decode of TILED JPEG 2000 scenes — the split-plan scan
     for the case where ONE scene is too big for one task (the reference's
@@ -129,7 +128,7 @@ def jp2_scene_tiles(
         schema="image_id string, path string, isot int, off long, ln long, "
                "tile_x int, tile_y int, th int, tw int",
     )
-    # descriptors spread across the cluster; hash on (image_id, isot) so one
+    # descriptors spread across the cluster; range on (image_id, isot) so one
     # scene's tiles land on MANY executors.  The partition count MUST be
     # explicit: descriptor rows are a few dozen bytes, so AQE's size-based
     # coalescing would otherwise fold the whole shuffle into ONE partition
@@ -138,15 +137,12 @@ def jp2_scene_tiles(
     # coalescing; size by decode cost, not by bytes.
     if parallelism is None:
         parallelism = files.sparkSession.sparkContext.defaultParallelism * 2
-    if partition_mode == "range":
-        # default: repartitionByRange samples boundaries -> near-equal tile
-        # COUNTS per partition; hash bucketing leaves +-20% skew that turns
-        # into last-wave stragglers on a compute-bound decode (measured at
-        # 1x4 -> 4x4 real executors: range 0.800 vs hash 0.785 efficiency,
-        # and 2x parallelism beats 4x — finer tasks just add scheduling)
-        splits = splits.repartitionByRange(parallelism, "image_id", "isot")
-    else:
-        splits = splits.repartition(parallelism, "image_id", "isot")
+    # repartitionByRange samples boundaries -> near-equal tile COUNTS per
+    # partition; hash bucketing leaves +-20% skew that turns into last-wave
+    # stragglers on a compute-bound decode (measured at 1x4 -> 4x4 real
+    # executors: range 0.800 vs hash 0.785 efficiency, and 2x parallelism
+    # beats 4x — finer tasks just add scheduling)
+    splits = splits.repartitionByRange(parallelism, "image_id", "isot")
 
     def decode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from eoreader_spark.sources import jp2 as _jp2

@@ -23,7 +23,9 @@ already hash-distributed on the tile key (bucketed/partitioned at rest, or
 repartitioned once and reused across several stencil ops — Spark reuses the
 exchange across the slope/hillshade/despeckle subtrees of one plan).
 Image borders pad with NaN and kernels use nan-aware reductions, matching
-xarray edge semantics.
+xarray edge semantics.  Every stencil here runs this one per-tile path: a
+Morton-block cogroup plan that shuffles only block-boundary strips measured
+4-5x slower at both cluster sizes (BENCH.md "One stencil path").
 """
 
 from __future__ import annotations
@@ -295,208 +297,6 @@ def center_kernel(pad: np.ndarray) -> np.ndarray:
     return pad[1 : t + 1, 1 : t + 1]
 
 
-def morton_key(x_col, y_col):
-    """Z-order (Morton) interleave of two non-negative 32-bit ints into a
-    64-bit key as a JVM column expression — the space-filling-curve key for
-    at-rest tile layouts: sorting/partitioning tile (or block) tables by
-    this key keeps 2-D neighbourhoods in the same file ranges, so stencil
-    neighbours co-locate (the north_rule's partition-by-parent-cell idea
-    applied to tile grids).  Full 32-bit magic-number spreading — no silent
-    truncation for coordinates >= 2^16 (round-4 review fix); pure codegen."""
-    import pyspark.sql.functions as F
-
-    def spread(c):
-        c = c.cast("long")
-        c = c.bitwiseOR(F.shiftleft(c, 16)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-        c = c.bitwiseOR(F.shiftleft(c, 8)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-        c = c.bitwiseOR(F.shiftleft(c, 4)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-        c = c.bitwiseOR(F.shiftleft(c, 2)).bitwiseAND(F.lit(0x3333333333333333))
-        c = c.bitwiseOR(F.shiftleft(c, 1)).bitwiseAND(F.lit(0x5555555555555555))
-        return c
-
-    x = F.col(x_col) if isinstance(x_col, str) else x_col
-    y = F.col(y_col) if isinstance(y_col, str) else y_col
-    return spread(x).bitwiseOR(F.shiftleft(spread(y), 1))
-
-
-# inverse of _DIR_COLS: halo column name -> (dx, dy) sender offset
-_COL_DIRS = {v: k for k, v in _DIR_COLS.items()}
-
-
-def block_cols(tiles: DataFrame, block: int) -> DataFrame:
-    """Tag tile rows with their block coords (_bx, _by) and Morton key
-    (_bkey).  In-session: repartition on ("image_id", "_bx", "_by") — the
-    blocked stencil's groupBy reuses that exchange, so the center payload
-    never moves again.  At rest: SORT/range-partition files by _bkey so
-    adjacent blocks share file ranges (the space-filling-curve layout)."""
-    import pyspark.sql.functions as F
-
-    df = tiles.withColumn("_bx", F.floor(F.col("tile_x") / block).cast("int"))
-    df = df.withColumn("_by", F.floor(F.col("tile_y") / block).cast("int"))
-    return df.withColumn("_bkey", morton_key("_bx", "_by"))
-
-
-def apply_stencil_blocked(
-    tiles: DataFrame,
-    kernels: dict[str, tuple[str, Callable[[np.ndarray], np.ndarray]]],
-    tile: int = TILE,
-    block: int = 8,
-    halo: int = 1,
-) -> DataFrame:
-    """Block-cooperative stencil — the multi-executor scale design (round-4;
-    BASELINE.md's one unmet criterion was the hash-partitioned stencil's
-    cross-executor halo traffic).
-
-    Tasks own Morton-ordered BxB tile blocks.  Within a block, neighbour
-    halos are plain array slices of the block mosaic — ZERO exchange.  Only
-    strips that CROSS a block boundary shuffle, cutting strip traffic by
-    ~B x vs per-tile halo exchange (8.3M -> 1.1M floats per 65k-tile pass at
-    B=8), and the grouped join disappears entirely: one groupBy on the
-    block key feeds an applyInPandas that assembles the (B*T + 2w)^2 mosaic
-    and runs the kernel ONCE over the whole block (better kernel locality
-    than 64 per-tile calls, same numerics).
-
-    When the input is ALREADY hash-distributed on ("image_id", "_bx",
-    "_by") (block_cols + repartition, reused across stencils; bucketed or
-    Morton-range-partitioned at rest in a real deployment) Catalyst elides
-    the groupBy exchange and the center payload never moves: total traffic
-    = cross-block strips only (~1.5% of payload at B=8, w=1).
-
-    Missing tiles inside a block stay NaN in the mosaic — identical border
-    semantics to the per-tile path; outputs are emitted only for present
-    tiles, so blocked == per-tile bit-for-bit (pinned in
-    tests/test_stencil_blocked.py)."""
-    import pyspark.sql.functions as F
-
-    t, w, B = tile, halo, block
-    px_cols = tuple(dict.fromkeys(pc for pc, _ in kernels.values()))
-    nb = len(px_cols)
-    out_cols = list(kernels)
-
-    # reuse the caller's block columns when present (block_cols +
-    # repartition): recomputing them would mint fresh expression ids, and
-    # Catalyst could no longer prove the cogroup's clustering requirement is
-    # already satisfied — the center payload would re-shuffle.  Callers that
-    # pass _bx/_by MUST have derived them with the same ``block``.
-    tagged = (
-        tiles if {"_bx", "_by"} <= set(tiles.columns) else block_cols(tiles, B)
-    )
-
-    # centers keep their native per-band columns — no concat, no reshape
-    centers = tagged.select(
-        "image_id", "_bx", "_by", "tile_x", "tile_y", *px_cols
-    )
-
-    # cross-block strips: only block-edge tiles can emit one, so prefilter
-    # before the 8-way inline explode; then keep exactly the strips whose
-    # target lies in another block
-    # pmod, not %: Spark's % takes the dividend's sign, so tile_x=-1 with
-    # B=8 gives -1 — negative tile coords would silently drop block-edge
-    # tiles from the strips exchange (floor-div block ids handle negatives)
-    edge = tagged.filter(
-        (F.pmod(F.col("tile_x"), B) == 0) | (F.pmod(F.col("tile_x"), B) == B - 1)
-        | (F.pmod(F.col("tile_y"), B) == 0) | (F.pmod(F.col("tile_y"), B) == B - 1)
-    )
-    strips = _strip_rows(
-        edge.select("image_id", "tile_x", "tile_y", *px_cols), t, px_cols, w
-    )
-    # sender coords from the direction name; keep only block-crossing strips
-    dx_case = "CASE dir " + " ".join(
-        f"WHEN '{c}' THEN {d[0]}" for c, d in _COL_DIRS.items()
-    ) + " END"
-    dy_case = "CASE dir " + " ".join(
-        f"WHEN '{c}' THEN {d[1]}" for c, d in _COL_DIRS.items()
-    ) + " END"
-    strips = strips.withColumn(
-        "_bx", F.floor(F.col("tile_x") / B).cast("int")
-    ).withColumn(
-        "_by", F.floor(F.col("tile_y") / B).cast("int")
-    ).filter(
-        (F.floor((F.col("tile_x") - F.expr(dx_case)) / B) != F.col("_bx"))
-        | (F.floor((F.col("tile_y") - F.expr(dy_case)) / B) != F.col("_by"))
-    ).select(
-        "image_id", "_bx", "_by", "tile_x", "tile_y", "dir",
-        F.col("strip").alias("data"),
-    )
-
-    schema = "image_id string, tile_x int, tile_y int, " + ", ".join(
-        f"{oc} array<float>" for oc in out_cols
-    )
-    seg_edge, seg_corner = w * t, w * w
-
-    def block_fn(key, cpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
-        _img, bx, by = key
-        if len(cpdf) == 0:  # strips aimed at an empty block
-            return pd.DataFrame(columns=["image_id", "tile_x", "tile_y", *out_cols])
-        side = B * t + 2 * w
-        mosaics = {c: np.full((side, side), np.nan, dtype=np.float32) for c in px_cols}
-        tiles_here: list[tuple[int, int]] = []
-        for row in cpdf.itertuples(index=False):
-            tyl, txl = row.tile_y - by * B, row.tile_x - bx * B
-            Y0, X0 = w + tyl * t, w + txl * t
-            tiles_here.append((row.tile_x, row.tile_y))
-            for c in px_cols:
-                mosaics[c][Y0 : Y0 + t, X0 : X0 + t] = np.asarray(
-                    getattr(row, c), dtype=np.float32
-                ).reshape(t, t)
-        for row in spdf.itertuples(index=False):
-            # strip placement around the TARGET tile (same geometry as
-            # assemble_pads_multi, in block-mosaic coordinates)
-            tyl, txl = row.tile_y - by * B, row.tile_x - bx * B
-            Y0, X0 = w + tyl * t, w + txl * t
-            d = np.asarray(row.data, dtype=np.float32)
-            corner = row.dir in ("h_nw", "h_ne", "h_sw", "h_se")
-            seg = seg_corner if corner else seg_edge
-            for i, c in enumerate(px_cols):
-                part = d[i * seg : (i + 1) * seg]
-                mo = mosaics[c]
-                if row.dir == "h_top":
-                    mo[Y0 - w : Y0, X0 : X0 + t] = part.reshape(w, t)
-                elif row.dir == "h_bot":
-                    mo[Y0 + t : Y0 + t + w, X0 : X0 + t] = part.reshape(w, t)
-                elif row.dir == "h_left":
-                    mo[Y0 : Y0 + t, X0 - w : X0] = part.reshape(t, w)
-                elif row.dir == "h_right":
-                    mo[Y0 : Y0 + t, X0 + t : X0 + t + w] = part.reshape(t, w)
-                elif row.dir == "h_nw":
-                    mo[Y0 - w : Y0, X0 - w : X0] = part.reshape(w, w)
-                elif row.dir == "h_ne":
-                    mo[Y0 - w : Y0, X0 + t : X0 + t + w] = part.reshape(w, w)
-                elif row.dir == "h_sw":
-                    mo[Y0 + t : Y0 + t + w, X0 - w : X0] = part.reshape(w, w)
-                else:  # h_se
-                    mo[Y0 + t : Y0 + t + w, X0 + t : X0 + t + w] = part.reshape(w, w)
-        # kernels run PER TILE over (T+2w)^2 views of the mosaic, not once
-        # over the whole block: a B=8 mosaic's temporaries (~8 arrays x
-        # 270k floats) spill L2 and run ~5x slower per pixel than the
-        # cache-resident tile-sized calls (measured); outputs are identical
-        # because the kernels are local.
-        out_rows = []
-        for tx, ty in tiles_here:
-            tyl, txl = ty - by * B, tx - bx * B
-            rec = {"image_id": _img, "tile_x": tx, "tile_y": ty}
-            for oc, (pc, kernel) in kernels.items():
-                pad = mosaics[pc][
-                    tyl * t : tyl * t + t + 2 * w, txl * t : txl * t + t + 2 * w
-                ]
-                rec[oc] = kernel(pad).astype(np.float32).ravel()
-            out_rows.append(rec)
-        return pd.DataFrame(
-            out_rows, columns=["image_id", "tile_x", "tile_y", *out_cols]
-        )
-
-    # cogroup, NOT union+groupBy: a Union never preserves children's
-    # partitioning, so the grouped exchange would re-shuffle pre-partitioned
-    # centers.  CoGroup requires clustering per SIDE — centers already
-    # hash-distributed on the block key stay PUT; only the (small) strips
-    # side shuffles.
-    return (
-        centers.groupby("image_id", "_bx", "_by")
-        .cogroup(strips.groupby("image_id", "_bx", "_by"))
-        .applyInPandas(block_fn, schema=schema)
-    )
-
-
 # ------------------------------------------------------------------ kernels
 def slope_kernel(pad: np.ndarray) -> np.ndarray:
     """Slope in degrees from central differences (unit grid spacing).
@@ -621,18 +421,13 @@ def slope(
     dem_tiles: DataFrame,
     tile: int = TILE,
     partitioned: bool = False,
-    block: int | None = None,
 ) -> DataFrame:
     """W2: dem tile rows (px = z) -> slope degrees.  Vectorized numpy kernel
     over the numpy-assembled pad (strips-only shuffle, see halo_rows; the
     tile and its flat halo cross Arrow once — with the 512-row Arrow batches
     set in session.py this is the fastest measured configuration, BENCH.md).
-    ``block=B`` routes through the block-cooperative path (multi-executor
-    scale design; bit-identical outputs)."""
-    if block:
-        return apply_stencil_blocked(
-            dem_tiles, {"px": ("px", slope_kernel)}, tile=tile, block=block
-        )
+    ``partitioned=True`` skips the center exchange for tile tables already
+    hash-distributed on the tile key (bucketed at rest)."""
     return apply_stencil(dem_tiles, slope_kernel, tile=tile, partitioned=partitioned)
 
 

@@ -184,12 +184,3 @@ def test_cosine_refine_paths(spark):
     exact = _plan(similarity.cosine_topk(q, emb, k=2, exact=True))
     assert "ArrowEvalPython" in prod or "EvalPython" in prod
     assert "ArrowEvalPython" not in exact and "BatchEvalPython" not in exact
-
-
-def test_blocked_stencil_uses_cogroup(spark):
-    from eoreader_spark import datagen
-    from eoreader_spark.operators import stencil
-
-    dem = datagen.gen_dem(spark, 2).withColumnRenamed("z", "px")
-    plan = _plan(stencil.slope(dem, block=4))
-    assert "FlatMapCoGroupsInPandas" in plan

@@ -308,6 +308,59 @@ def test_multi_band_despeckle_matches_single(spark):
         np.testing.assert_array_equal(np.asarray(f[k][1]), np.asarray(s2[k]))
 
 
+_LEE = stencil.refined_lee_kernel_factory(4.0)
+_EDGE_GRIDS = {
+    # a hole in the tile grid on an odd-sized (5x3) grid
+    "hole": (stencil.slope_kernel, 1, range(5), range(3), {(2, 1)}, 13),
+    # tiles west/north of the grid origin
+    "negative_coords": (
+        stencil.slope_kernel, 1, range(-3, 2), range(-3, 2), set(), 17,
+    ),
+    # width-3 halo: corner strips carry 3x3 pixels
+    "refined_lee_halo3": (_LEE, 3, range(4), range(4), set(), 17),
+    "refined_lee_halo3_holes": (
+        _LEE, 3, range(4), range(4), {(1, 1), (2, 3)}, 23,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_GRIDS))
+def test_stencil_edge_grids_match_mosaic_reference(spark, case):
+    """Per-tile halo path == the same kernel over windows of the whole
+    NaN-filled, NaN-padded mosaic, bit-for-bit: missing tiles and image
+    edges read as NaN, negative tile coordinates address neighbours like
+    any others, and width-3 strips land in the right pad cells."""
+    kernel, w, xs, ys, holes, seed = _EDGE_GRIDS[case]
+    t = 16
+    rng = np.random.RandomState(seed)
+    px = {
+        (tx, ty): rng.randint(0, 1000, size=t * t).astype(np.float32)
+        for ty in ys for tx in xs if (tx, ty) not in holes
+    }
+    df = spark.createDataFrame(
+        [("i0", tx, ty, a.tolist()) for (tx, ty), a in px.items()],
+        "image_id string, tile_x int, tile_y int, px array<float>",
+    )
+    got = {
+        (r.tile_x, r.tile_y): np.asarray(r.px, dtype=np.float32)
+        for r in stencil.apply_stencil(df, kernel, tile=t, halo=w).collect()
+    }
+    x0, y0 = min(xs), min(ys)
+    mosaic = np.full(
+        (len(ys) * t + 2 * w, len(xs) * t + 2 * w), np.nan, dtype=np.float32
+    )
+    for (tx, ty), a in px.items():
+        r, c = w + (ty - y0) * t, w + (tx - x0) * t
+        mosaic[r : r + t, c : c + t] = a.reshape(t, t)
+    assert set(got) == set(px)
+    for tx, ty in px:
+        r, c = (ty - y0) * t, (tx - x0) * t
+        pad = np.ascontiguousarray(mosaic[r : r + t + 2 * w, c : c + t + 2 * w])
+        want = kernel(pad).astype(np.float32).ravel()
+        np.testing.assert_array_equal(got[(tx, ty)], want, err_msg=str((tx, ty)))
+        assert not np.isnan(want).any()
+
+
 def test_s2_baseline_offset_and_sun_distance(spark):
     """F2/F4 parity: the baseline-4 DN offset and the ephemeris-free
     Sun-Earth-distance formula reproduce the reference's published

@@ -131,18 +131,6 @@ def run_stencil_bucketed():
 t_stencil_bkt = best(run_stencil_bucketed, reps=2)
 demp.unpersist()
 
-# block-cooperative variant (round 4): Morton 8x8 tile blocks pre-partitioned
-# on the block key (the at-rest layout) -> centers NEVER cross an exchange
-# (cogroup reuses the partitioning) and only block-boundary strips shuffle
-# (~1/8 the strip volume).  This is the multi-executor scale design for the
-# one BASELINE criterion the per-tile halo missed.
-demb = stencil.block_cols(dem, 8).repartition(max(cpus, 8), "image_id", "_bx", "_by").persist()
-demb.count()
-def run_stencil_blocked():
-    stencil.slope(demb, block=8).count()
-t_stencil_blk = best(run_stencil_blocked, reps=2)
-demb.unpersist()
-
 # round-5 stage: tile-parallel decode of SINGLE scenes (8 files x 64
 # independently-coded JP2 tile-parts).  The two-stage split plan: a seek
 # index emits narrow descriptors, descriptors repartition (image bytes
@@ -175,7 +163,7 @@ t_cpu = best(lambda: cdf.mapInPandas(cpu_kernel, schema="s long").count(), reps=
 print("RESULT " + json.dumps({
     "cpus": cpus, "n_assign": n_assign[0], "n_dem_tiles": n_dem[0],
     "t_index": t_index, "t_assign": t_assign, "t_stencil": t_stencil,
-    "t_stencil_bucketed": t_stencil_bkt, "t_stencil_blocked": t_stencil_blk, "t_cpu_kernel": t_cpu,
+    "t_stencil_bucketed": t_stencil_bkt, "t_cpu_kernel": t_cpu,
     "t_jp2tile": t_jp2, "n_jp2_tiles": n_jp2[0],
     "jp2_tiles_per_sec": round(n_jp2[0] / t_jp2, 1) if t_jp2 else None,
     "images_per_sec": round(n / t_index, 1),
@@ -257,7 +245,7 @@ def main() -> None:
         eff = {
             k: round(lo[k] / hi[k] / 4.0, 3)
             for k in (
-                "t_index", "t_assign", "t_stencil", "t_stencil_bucketed", "t_stencil_blocked", "t_cpu_kernel",
+                "t_index", "t_assign", "t_stencil", "t_stencil_bucketed", "t_cpu_kernel",
                 "t_jp2tile",
             )
             if lo.get(k) and hi.get(k)
