@@ -477,46 +477,64 @@ def to_reflectance(plane: np.ndarray) -> np.ndarray:
     return (plane + REFL_OFFSET) / REFL_QUANTIF
 
 
-def index_stats(
-    images: DataFrame,
+STATS_SCHEMA = "image_id string, index_name string, mean double, min double, max double"
+STATS_INPUT = ["image_id", "bytes", "fmt", "h", "w"]
+
+
+def stats_kernel(
     index_names: list[str],
     params: dict[str, dict] | None = None,
     plane_map: dict[str, int] | None = None,
-) -> DataFrame:
-    """images -> (image_id, index_name, mean, min, max) per index.
+) -> Callable[[pd.DataFrame], pd.DataFrame]:
+    """The decode+index kernel: a pandas batch of ``STATS_INPUT`` columns ->
+    ``STATS_SCHEMA`` rows, one per (image, index).
 
     One decode per image feeds every requested index (the reference's
     'open them only one time!' CSE,
     /root/reference/eoreader/products/product.py:1242-1247).
     ``plane_map`` is the constellation's band->plane table (default: the
-    legacy 3-plane layout).
+    legacy 3-plane layout); a missing band raises here, on the driver.
     """
     params = params or {}
     names = list(index_names)
     pmap = dict(plane_map) if plane_map is not None else dict(PLANE_OF)
     # capture the kernels in the task closure — executors re-import the module,
     # so driver-side register_index() mutations must travel with the plan
-    entries = {n: INDEX_REGISTRY[n] for n in names}
+    fns = {n: INDEX_REGISTRY[n][1] for n in names}
     needs = needed_bands(names)
     missing = [b for b in needs if b not in pmap]
     if missing:
         raise KeyError(f"index dependencies not in plane_map: {missing}")
-    schema = "image_id string, index_name string, mean double, min double, max double"
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = []
+        for iid, img in zip(pdf["image_id"], decode_planes(pdf)):
+            bands = {b: to_reflectance(img[pmap[b]]) for b in needs}
+            for n in names:
+                v = fns[n](bands, **params.get(n, {})).astype(np.float64)
+                rows.append((iid, n, float(v.mean()), float(v.min()), float(v.max())))
+        return pd.DataFrame(rows, columns=["image_id", "index_name", "mean", "min", "max"])
+
+    return kernel
+
+
+def index_stats(
+    images: DataFrame,
+    index_names: list[str],
+    params: dict[str, dict] | None = None,
+    plane_map: dict[str, int] | None = None,
+) -> DataFrame:
+    """images -> (image_id, index_name, mean, min, max) per index: the
+    ``stats_kernel`` over the Arrow bridge (sources/pyscan.index_stats_scan
+    runs the same kernel on data-local reads)."""
+    kernel = stats_kernel(index_names, params, plane_map)
 
     def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if len(pdf) == 0:
-                continue
-            rows = []
-            for (iid,), img in zip(pdf[["image_id"]].itertuples(index=False), decode_planes(pdf)):
-                bands = {b: to_reflectance(img[pmap[b]]) for b in needs}
-                for n in names:
-                    _, fn = entries[n]
-                    v = fn(bands, **params.get(n, {})).astype(np.float64)
-                    rows.append((iid, n, float(v.mean()), float(v.min()), float(v.max())))
-            yield pd.DataFrame(rows, columns=["image_id", "index_name", "mean", "min", "max"])
+            if len(pdf):
+                yield kernel(pdf)
 
-    return images.select("image_id", "bytes", "fmt", "h", "w").mapInPandas(batch, schema=schema)
+    return images.select(*STATS_INPUT).mapInPandas(batch, schema=STATS_SCHEMA)
 
 
 def oracle_index_stats(

@@ -86,20 +86,32 @@ class LineageStore:
     ) -> dict:
         """Write the uncommitted part of ``df`` to ``root/stage`` partitioned
         by ``key_col``, then commit lineage rows.  Returns resume metrics."""
-        todo = self.pending(df, stage, key_col).persist()
+        return self._commit(stage, self.pending(df, stage, key_col), key_col, payload_col)
+
+    def upsert_stage(self, stage: str, df: DataFrame, key_col: str) -> dict:
+        """Streaming variant: OVERWRITE the partitions present in ``df`` and
+        re-commit their lineage (no pending anti-join) — for sinks that
+        re-emit corrected aggregates for already-seen keys (late data /
+        complete-mode windows).  Latest lineage row wins in reads."""
+        return self._commit(stage, df, key_col)
+
+    def _commit(
+        self, stage: str, df: DataFrame, key_col: str, payload_col: str | None = None
+    ) -> dict:
+        """The one write-then-commit body: dynamic-overwrite the partitions
+        present in ``df``, then append one lineage row per key.  An empty
+        ``df`` writes and commits nothing."""
+        todo = df.persist()
         n = todo.count()
         if n == 0:
             todo.unpersist()
             return {"stage": stage, "rows_written": 0, "keys_committed": 0, "skipped": True}
-
-        out_dir = f"{self.root}/{stage}"
         (
             todo.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(key_col)
-            .parquet(out_dir)
+            .parquet(f"{self.root}/{stage}")
         )
-
         size_expr = (
             F.sum(F.octet_length(F.col(payload_col).cast("binary")))
             if payload_col and dict(todo.dtypes).get(payload_col) in ("binary", "string")
@@ -119,39 +131,7 @@ class LineageStore:
         self.spark.createDataFrame(stats_rows, LINEAGE_SCHEMA).write.mode("append").parquet(
             self.lineage_dir
         )
-        keys = len(stats_rows)
         todo.unpersist()
-        return {"stage": stage, "rows_written": n, "keys_committed": keys, "skipped": False}
-
-    def upsert_stage(self, stage: str, df: DataFrame, key_col: str) -> dict:
-        """Streaming variant: OVERWRITE the partitions present in ``df`` and
-        re-commit their lineage (no pending anti-join) — for sinks that
-        re-emit corrected aggregates for already-seen keys (late data /
-        complete-mode windows).  Latest lineage row wins in reads."""
-        rows = df.persist()
-        n = rows.count()
-        if n == 0:
-            rows.unpersist()
-            return {"stage": stage, "rows_written": 0, "keys_committed": 0, "skipped": True}
-        (
-            rows.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(key_col)
-            .parquet(f"{self.root}/{stage}")
-        )
-        stats_rows = (
-            rows.groupBy(F.col(key_col).cast("long").alias("part_key"))
-            .agg(F.count(F.lit(1)).alias("row_count"))
-            .withColumn("bytes", F.lit(0).cast("long"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("committed_at", F.lit(time.time()))
-            .select("stage", "part_key", "row_count", "bytes", "committed_at")
-            .collect()
-        )
-        self.spark.createDataFrame(stats_rows, LINEAGE_SCHEMA).write.mode("append").parquet(
-            self.lineage_dir
-        )
-        rows.unpersist()
         return {"stage": stage, "rows_written": n, "keys_committed": len(stats_rows), "skipped": False}
 
     def read_stage(self, stage: str) -> DataFrame:

@@ -9,17 +9,17 @@ and windows reads to an AOI (/root/reference/eoreader/utils.py:137-239,729-761).
 Spark-first re-expression (BASELINE.json north_star):
   1. coarse:  explode AOI covering cells -> equi-join tiles on cell_r7
               (Catalyst partition-prunes when tiles are laid out by cell).
-  2. strategy, chosen from CELL-HISTOGRAM / table stats:
-     - 'broadcast' (default when the AOI set is driver-sized, the common
-       case for query polygons): AOI rings are parsed ONCE on the driver and
+  2. strategy, chosen by one AOI-count probe (BROADCAST_AOI_LIMIT):
+     - 'broadcast' (the AOI set is driver-sized, the common case for query
+       polygons): AOI rings are parsed ONCE on the driver and
        broadcast; only NARROW (aoi_id, cell) pairs enter the join and only
        narrow numeric tile rows cross the Arrow bridge to the refine kernel.
        Shipping polygon WKT per candidate row measurably contends on the
        Arrow allocator at high core counts — geometry goes via broadcast,
        never via the shuffle.
      - 'salted' (huge AOI tables): distributed join with EXPLICIT SALTING of
-       hot cells (count > skew_factor x median from the cell histogram):
-       tile side gets a deterministic salt, AOI side is exploded x n_salts
+       hot cells (count > SKEW_FACTOR x median from the cell histogram):
+       tile side gets a deterministic salt, AOI side is exploded x N_SALTS
        on hot cells only.
   3. refine:  batched ray-casting PIP of tile centers vs the AOI ring inside
               mapInPandas — vectorized, no per-row Python.
@@ -36,7 +36,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from eoreader_spark.spatial import pip
@@ -60,9 +60,23 @@ def cell_histogram(tiles: DataFrame) -> DataFrame:
     return tiles.groupBy("cell_r7").agg(F.count(F.lit(1)).alias("n_tiles"))
 
 
-def _assign_broadcast(tiles: DataFrame, aoi) -> DataFrame:
+def _tile_centers() -> tuple[Column, Column]:
+    """Tile-center expressions: the point every strategy tests against the
+    AOI polygon."""
+    return (F.col("x0") + F.col("x1")) * 0.5, (F.col("y0") + F.col("y1")) * 0.5
+
+
+def _in_bbox(bx0: Column, by0: Column, bx1: Column, by1: Column) -> Column:
+    """Conservative bbox prefilter, run JVM-side (Tungsten predicate) so only
+    plausible candidates reach the Python ray-cast — PIP-inside is a subset
+    of the closed bbox, so results are unchanged."""
+    cx, cy = _tile_centers()
+    return (cx >= bx0) & (cx <= bx1) & (cy >= by0) & (cy <= by1)
+
+
+def _assign_broadcast(tiles: DataFrame, rows: list) -> DataFrame:
     """Driver-sized AOI path: rings via sc.broadcast, narrow join keys.
-    ``aoi`` may be the AOI DataFrame or pre-collected Rows (strategy probe).
+    ``rows`` are the AOI rows the strategy probe already collected.
 
     The refine is a vectorized BOOLEAN pandas UDF over (aoi_idx int, cx, cy
     doubles) only — string columns stay in the JVM and the filter applies
@@ -71,7 +85,6 @@ def _assign_broadcast(tiles: DataFrame, aoi) -> DataFrame:
     numeric-only legs scale cleanly.
     """
     spark = tiles.sparkSession
-    rows = aoi.select("aoi_id", "geom_wkt", "cells_r7").collect() if not isinstance(aoi, list) else aoi
     ring_list = [pip.parse_wkt_polygon(r.geom_wkt) for r in rows]
     bc = spark.sparkContext.broadcast(ring_list)
     pairs = [
@@ -83,15 +96,8 @@ def _assign_broadcast(tiles: DataFrame, aoi) -> DataFrame:
         pairs, "aoi_idx int, aoi_id string, cell_r7 long,"
         " bx0 double, by0 double, bx1 double, by1 double"
     )
-
-    # conservative bbox prefilter runs JVM-side (Tungsten predicate) so only
-    # plausible candidates reach the Python ray-cast — PIP-inside is a subset
-    # of the closed bbox, so results are unchanged
-    ccx = (F.col("x0") + F.col("x1")) * 0.5
-    ccy = (F.col("y0") + F.col("y1")) * 0.5
     cand = tiles.join(F.broadcast(ac), "cell_r7").filter(
-        (ccx >= F.col("bx0")) & (ccx <= F.col("bx1"))
-        & (ccy >= F.col("by0")) & (ccy <= F.col("by1"))
+        _in_bbox(F.col("bx0"), F.col("by0"), F.col("bx1"), F.col("by1"))
     )
 
     @F.pandas_udf("boolean")
@@ -105,8 +111,7 @@ def _assign_broadcast(tiles: DataFrame, aoi) -> DataFrame:
         )
         return pd.Series(keep)
 
-    cx = (F.col("x0") + F.col("x1")) * 0.5
-    cy = (F.col("y0") + F.col("y1")) * 0.5
+    cx, cy = _tile_centers()
     return (
         cand.withColumn("keep", inside(F.col("aoi_idx"), cx, cy))
         .filter(F.col("keep"))
@@ -164,44 +169,26 @@ def _assign_salted(
             ),
         )
         cand = t.join(a, ["cell_r7", "salt"]).drop("salt")
-    # same conservative bbox prefilter as the broadcast path, JVM-side
-    ccx = (F.col("x0") + F.col("x1")) * 0.5
-    ccy = (F.col("y0") + F.col("y1")) * 0.5
-    cand = cand.filter(
-        (ccx >= F.col("__bbox")[0]) & (ccx <= F.col("__bbox")[2])
-        & (ccy >= F.col("__bbox")[1]) & (ccy <= F.col("__bbox")[3])
-    ).select(
+    bb = F.col("__bbox")
+    cand = cand.filter(_in_bbox(bb[0], bb[1], bb[2], bb[3])).select(
         "aoi_id", "image_id", "tile_x", "tile_y", "cell_r7", "x0", "y0", "x1", "y1", "geom_wkt"
     )
     return cand.mapInPandas(_refine_wkt, schema=_REFINE_SCHEMA)
 
 
-def assign_tiles(
-    tiles: DataFrame,
-    aoi: DataFrame,
-    broadcast_limit: int = BROADCAST_AOI_LIMIT,
-    skew_factor: float = SKEW_FACTOR,
-    n_salts: int = N_SALTS,
-    force_strategy: str | None = None,
-) -> DataFrame:
+def assign_tiles(tiles: DataFrame, aoi: DataFrame) -> DataFrame:
     """-> (aoi_id, image_id, tile_x, tile_y, cell_r7): tiles whose center is
-    inside the AOI polygon.  Strategy: 'broadcast' | 'salted' | None (auto,
-    from the AOI table size stat)."""
-    strategy = force_strategy
-    if strategy is None:
-        # one probe job: fetch up to limit+1 AOI rows; under the limit the
-        # same rows feed the broadcast path directly (at scale this is a
-        # table-metadata row count, free)
-        probe = aoi.select("aoi_id", "geom_wkt", "cells_r7").limit(broadcast_limit + 1).collect()
-        if len(probe) <= broadcast_limit:
-            return _assign_broadcast(tiles, probe)
-        strategy = "salted"
-    if strategy == "broadcast":
-        return _assign_broadcast(tiles, aoi)
-    return _assign_salted(tiles, aoi, skew_factor, n_salts)
+    inside the AOI polygon.  One probe job fetches up to
+    BROADCAST_AOI_LIMIT + 1 AOI rows: under the limit the same rows feed the
+    broadcast path directly (at scale this is a table-metadata row count,
+    free); over it the salted shuffle join runs."""
+    probe = aoi.select("aoi_id", "geom_wkt", "cells_r7").limit(BROADCAST_AOI_LIMIT + 1).collect()
+    if len(probe) <= BROADCAST_AOI_LIMIT:
+        return _assign_broadcast(tiles, probe)
+    return _assign_salted(tiles, aoi, SKEW_FACTOR, N_SALTS)
 
 
-def join_rows(tiles: DataFrame, aoi: DataFrame, **kw) -> DataFrame:
+def join_rows(tiles: DataFrame, aoi: DataFrame) -> DataFrame:
     """Scene-level join rows (aoi_id, image_id) — the BASELINE.json:2
     'join-row match' output: distinct images with >=1 assigned tile."""
-    return assign_tiles(tiles, aoi, **kw).select("aoi_id", "image_id").distinct()
+    return assign_tiles(tiles, aoi).select("aoi_id", "image_id").distinct()

@@ -25,8 +25,6 @@ from pyspark.sql import functions as F
 from eoreader_spark import codecs
 from eoreader_spark.datagen import TILE
 
-TILE_SCHEMA = "image_id string, tile_x int, tile_y int, px array<float>"
-
 
 def tiles_from_images(images: DataFrame, plane: int, tile: int = TILE) -> DataFrame:
     """Decode `bytes` -> float32 tile rows for one plane (band).
@@ -35,23 +33,7 @@ def tiles_from_images(images: DataFrame, plane: int, tile: int = TILE) -> DataFr
     ``multi_plane_tiles`` (decodes once, like the reference's
     'open them only one time!' product.py:1242-1247).
     """
-
-    def batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for iid, data, fmt, h, w in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["h"], pdf["w"]
-            ):
-                arr = codecs.decode(bytes(data), fmt, int(h), int(w))[plane].astype(np.float32)
-                for ty in range(int(h) // tile):
-                    for tx in range(int(w) // tile):
-                        px = arr[ty * tile : (ty + 1) * tile, tx * tile : (tx + 1) * tile]
-                        rows.append((iid, tx, ty, px.ravel()))
-            yield pd.DataFrame(rows, columns=["image_id", "tile_x", "tile_y", "px"])
-
-    return images.select("image_id", "bytes", "fmt", "h", "w").mapInPandas(
-        batch, schema=TILE_SCHEMA
-    )
+    return multi_plane_tiles(images, [plane], tile).withColumnRenamed(f"px_{plane}", "px")
 
 
 def multi_plane_tiles(images: DataFrame, planes: list[int], tile: int = TILE) -> DataFrame:
@@ -65,11 +47,12 @@ def multi_plane_tiles(images: DataFrame, planes: list[int], tile: int = TILE) ->
             for iid, data, fmt, h, w in zip(
                 pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["h"], pdf["w"]
             ):
-                arr = codecs.decode(bytes(data), fmt, int(h), int(w)).astype(np.float32)
+                # select the planes before the cast: only they become float32
+                arr = codecs.decode(bytes(data), fmt, int(h), int(w))[planes].astype(np.float32)
                 for ty in range(int(h) // tile):
                     for tx in range(int(w) // tile):
                         sl = arr[:, ty * tile : (ty + 1) * tile, tx * tile : (tx + 1) * tile]
-                        rows.append((iid, tx, ty, *[sl[p].ravel() for p in planes]))
+                        rows.append((iid, tx, ty, *[p.ravel() for p in sl]))
             yield pd.DataFrame(
                 rows, columns=["image_id", "tile_x", "tile_y", *[f"px_{p}" for p in planes]]
             )

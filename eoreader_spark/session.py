@@ -56,7 +56,7 @@ def get_spark(
         # pandas UDFs ANTI-scale with local core count (BENCH.md round 2:
         # slope 63s -> 13s at local[32] just from this knob)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        # limit probes (assign_tiles' broadcast_limit+1 fetch, stats peeks)
+        # limit probes (assign_tiles' BROADCAST_AOI_LIMIT+1 fetch, stats peeks)
         # start at ONE partition by default and rescan with 4x growth —
         # every retry re-runs generator/mapInPandas inputs.  One task wave
         # (~core count) resolves small tables in a single job; CollectLimit

@@ -6,17 +6,22 @@ allocator — measured on this box, a 32-thread local JVM moves the same 400 MB
 of image bytes 10-20x SLOWER than an 8-thread one (narrow columns scale
 perfectly; only large var-binary columns invert).  Production executors run
 4-8 cores per JVM and rarely hit this, but the right architecture at any
-scale is: the driver plans SPLITS (file + row-group ranges), the JVM runs
+scale is: the driver plans SPLITS (one per parquet row group), the JVM runs
 one wave of tasks (one per core) over a ``spark.range`` of split ids, and
 each Python task reads its own block of splits with pyarrow — data-local,
 zero JVM byte-shuffling, no exchange, exactly how a C++/Rust scan operator
 would behave.  This is the engine's S3-scan analog (EOReader's windowed
 rasterio read in ``eoreader/utils.py``).
 
+``scan`` is kernel-agnostic; ``index_stats_scan`` plugs in
+``functions.indices.stats_kernel``, the same decode+index kernel that
+``indices.index_stats`` runs over the Arrow bridge, so the two transports
+cannot drift.
+
 Pruning: row-group splits carry parquet min/max stats, so predicate pushdown
 on split columns happens at plan time (driver), and column pruning happens in
-``pq.read_table(columns=...)`` — the same two optimizations Catalyst applies
-to JVM scans.
+``read_row_groups(columns=...)`` — the same two optimizations Catalyst
+applies to JVM scans.
 """
 
 from __future__ import annotations
@@ -55,13 +60,10 @@ def _rg_excluded(rg_meta, predicate: tuple[str, object, object]) -> bool:
 
 def parquet_splits(
     path: str,
-    split_row_groups: bool = True,
     predicate: tuple[str, object, object] | None = None,
 ) -> list[tuple[str, int, int]]:
-    """Driver-side split planning: -> [(file, row_group_start, row_group_end)].
-
-    One split per row group when ``split_row_groups`` (finer parallelism for
-    few-large-files layouts); else one per file.
+    """Driver-side split planning: one split per row group ->
+    [(file, row_group, row_group + 1)].
 
     ``predicate=(column, lo, hi)`` prunes row groups whose footer min/max
     stats exclude the closed range — the Iceberg-manifest / Catalyst
@@ -74,18 +76,9 @@ def parquet_splits(
     splits: list[tuple[str, int, int]] = []
     for f in files:
         meta = pq.ParquetFile(f).metadata
-        if split_row_groups:
-            for i in range(meta.num_row_groups):
-                if predicate is not None and _rg_excluded(meta.row_group(i), predicate):
-                    continue
+        for i in range(meta.num_row_groups):
+            if predicate is None or not _rg_excluded(meta.row_group(i), predicate):
                 splits.append((f, i, i + 1))
-        else:
-            if predicate is not None and all(
-                _rg_excluded(meta.row_group(i), predicate)
-                for i in range(meta.num_row_groups)
-            ):
-                continue
-            splits.append((f, 0, -1))
     return splits
 
 
@@ -117,11 +110,7 @@ def scan(
         for pdf in it:
             for i in pdf["id"]:
                 file, rg0, rg1 = splits[i]
-                pf = pq.ParquetFile(file)
-                if rg1 < 0:
-                    table = pf.read(columns=columns)
-                else:
-                    table = pf.read_row_groups(list(range(rg0, rg1)), columns=columns)
+                table = pq.ParquetFile(file).read_row_groups(list(range(rg0, rg1)), columns=columns)
                 out = kernel(table.to_pandas())
                 if out is not None and len(out):
                     yield out
@@ -129,37 +118,16 @@ def scan(
     return spark.range(0, len(splits), 1, n).mapInPandas(run, schema=schema)
 
 
-def index_stats_scan(
-    spark: SparkSession, images_path: str, index_names: list[str],
-    params: dict[str, dict] | None = None,
-    predicate: tuple[str, object, object] | None = None,
-) -> DataFrame:
-    """The production form of functions.indices.index_stats: decode + index
-    kernels run against locally-read splits (bytes never cross the JVM)."""
+def index_stats_scan(spark: SparkSession, images_path: str, index_names: list[str]) -> DataFrame:
+    """The production form of functions.indices.index_stats: the same
+    ``indices.stats_kernel`` run against locally-read splits (bytes never
+    cross the JVM)."""
     from eoreader_spark.functions import indices
-
-    params = params or {}
-    names = list(index_names)
-    entries = {n: indices.INDEX_REGISTRY[n] for n in names}
-    needs = indices.needed_bands(names)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np  # noqa: F401
-
-        rows = []
-        for iid, img in zip(pdf["image_id"], indices.decode_planes(pdf)):
-            bands = {b: indices.to_reflectance(img[indices.PLANE_OF[b]]) for b in needs}
-            for n in names:
-                _, fn = entries[n]
-                v = fn(bands, **params.get(n, {})).astype("float64")
-                rows.append((iid, n, float(v.mean()), float(v.min()), float(v.max())))
-        return pd.DataFrame(rows, columns=["image_id", "index_name", "mean", "min", "max"])
 
     return scan(
         spark,
         images_path,
-        kernel,
-        schema="image_id string, index_name string, mean double, min double, max double",
-        columns=["image_id", "bytes", "fmt", "h", "w"],
-        predicate=predicate,
+        indices.stats_kernel(index_names),
+        schema=indices.STATS_SCHEMA,
+        columns=indices.STATS_INPUT,
     )

@@ -6,9 +6,11 @@ incremental memoization/resume (S11): each expensive stage persists its
 artifact and later runs skip it.  Here that becomes the streaming ingest
 path the north_rule asks for: scene/image feeds arrive continuously, are
 windowed + aggregated with watermarked event time, and every micro-batch
-commits per-partition lineage rows through foreachBatch — the same
-LineageStore used by batch stages, so batch and streaming share one
-resume/metrics story.
+goes through ``drain_to_lineage`` — the one availableNow foreachBatch
+drain, which commits each micro-batch with ``LineageStore.upsert_stage``,
+the same write-then-commit body (``LineageStore._commit``) batch stages
+run through ``run_stage``.  The raster stream runs the batch decode+index
+kernel (``functions.indices.index_stats``) unchanged.
 
 All ops are standard Structured Streaming primitives: readStream (file
 source), withWatermark + window() aggregation, applyInPandasWithState for
@@ -17,7 +19,7 @@ the custom stateful operator (per-scene ingest sessionization).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eoreader_spark.lineage import LineageStore
@@ -26,6 +28,41 @@ EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
     " value double, props string"
 )
+
+
+def drain_to_lineage(
+    stream: DataFrame,
+    store: LineageStore,
+    stage: str,
+    key_col: str,
+    key: Column | None,
+    checkpoint: str,
+    output_mode: str = "append",
+) -> dict:
+    """Drain ``stream`` once (availableNow) into ``store``: each micro-batch
+    gets ``key_col`` = ``key`` (None: the micro-batch id) and is committed
+    with ``store.upsert_stage`` — overwrite the partitions it touches, then
+    re-commit their lineage, so a retried batch is idempotent and a
+    complete-mode re-emit replaces stale totals.  Empty micro-batches commit
+    nothing.  -> {batches, rows}, counting only batches that committed rows."""
+    metrics = {"batches": 0, "rows": 0}
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        k = F.lit(int(batch_id)) if key is None else key
+        r = store.upsert_stage(stage, batch_df.withColumn(key_col, k.cast("long")), key_col)
+        if not r["skipped"]:
+            metrics["batches"] += 1
+            metrics["rows"] += r["rows_written"]
+
+    q = (
+        stream.writeStream.outputMode(output_mode)
+        .foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return metrics
 
 
 def read_events_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -55,33 +92,20 @@ def run_windowed_to_lineage(
     checkpoint_root: str,
     window: str = "1 hour",
 ) -> dict:
-    """availableNow pipeline: stream -> windowed agg -> foreachBatch sink that
-    appends results AND lineage rows (stage='stream_windows', key = hour
-    bucket) atomically per micro-batch.  Returns sink metrics."""
-    store = LineageStore(spark, checkpoint_root)
+    """availableNow pipeline: stream -> windowed agg -> lineage drain
+    (stage='stream_windows', key = hour bucket).  Complete mode re-emits
+    CORRECTED totals for already-seen windows, so the drain's upsert
+    overwrites them — run_stage's anti-join would freeze stale counts."""
     agg = windowed_counts(read_events_stream(spark, input_dir), window=window)
-    metrics = {"batches": 0, "rows": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df.withColumn(
-            "bucket", (F.unix_timestamp("window_start") / 3600).cast("long")
-        )
-        # complete-mode re-emits CORRECTED totals for already-seen windows, so
-        # the sink must upsert (overwrite + re-commit lineage), never skip
-        # committed buckets — run_stage's anti-join would freeze stale counts
-        r = store.upsert_stage("stream_windows", out, "bucket")
-        metrics["batches"] += 1
-        metrics["rows"] += r["rows_written"]
-
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", f"{checkpoint_root}/_stream_ck")
-        .trigger(availableNow=True)
-        .start()
+    return drain_to_lineage(
+        agg,
+        LineageStore(spark, checkpoint_root),
+        "stream_windows",
+        "bucket",
+        F.unix_timestamp("window_start") / 3600,
+        f"{checkpoint_root}/_stream_ck",
+        output_mode="complete",
     )
-    q.awaitTermination()
-    return metrics
 
 
 def sessionize(
@@ -170,47 +194,28 @@ def read_images_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     return spark.readStream.schema(IMAGES_SCHEMA).parquet(input_dir)
 
 
-def streaming_index_stats(images: DataFrame, index_names: list[str]) -> DataFrame:
-    """Decode + spectral indices on a STREAM of images — the identical
-    mapInPandas kernel the batch path uses (functions/indices.index_stats),
-    applied to an unbounded source.  Stateless per-row transform: no
-    watermark needed; downstream windowed aggs or the lineage sink handle
-    time semantics."""
-    from eoreader_spark.functions import indices
-
-    return indices.index_stats(images, index_names)
-
-
 def run_image_index_to_lineage(
     spark: SparkSession,
     input_dir: str,
     store_root: str,
     index_names: list[str] | None = None,
 ) -> dict:
-    """Streaming raster pipeline: images stream -> decode+index kernels ->
-    per-micro-batch upsert + lineage rows (stage='stream_index', part_key =
-    micro-batch id) through the SAME LineageStore as the batch stages — one
-    resume/metrics story for both execution modes."""
-    store = LineageStore(spark, store_root)
-    stats = streaming_index_stats(
+    """Streaming raster pipeline: images stream -> the batch decode+index
+    kernel (indices.index_stats, stateless per row) -> lineage drain
+    (stage='stream_index', part_key = micro-batch id)."""
+    from eoreader_spark.functions import indices
+
+    stats = indices.index_stats(
         read_images_stream(spark, input_dir), index_names or ["NDVI", "NDWI"]
     )
-    metrics = {"batches": 0, "rows": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df.withColumn("bucket", F.lit(int(batch_id)).cast("long"))
-        r = store.upsert_stage("stream_index", out, "bucket")
-        metrics["batches"] += 1
-        metrics["rows"] += r["rows_written"]
-
-    q = (
-        stats.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{store_root}/_stream_index_ck")
-        .trigger(availableNow=True)
-        .start()
+    return drain_to_lineage(
+        stats,
+        LineageStore(spark, store_root),
+        "stream_index",
+        "bucket",
+        None,
+        f"{store_root}/_stream_index_ck",
     )
-    q.awaitTermination()
-    return metrics
 
 
 def dedup_stream(
@@ -236,28 +241,16 @@ def run_dedup_to_lineage(
     root: str,
     keys: list[str] | None = None,
 ) -> dict:
-    """Deduped stream -> partitioned sink with per-batch lineage commits
-    (same store as every batch stage)."""
-    store = LineageStore(spark, root)
+    """Deduped stream -> lineage drain (stage='stream_dedup').  Partition
+    key = micro-batch id: a retried batch dynamically OVERWRITES its own
+    partition (idempotent, the standard exactly-once foreachBatch recipe)
+    and can never clobber rows another batch appended."""
     deduped = dedup_stream(read_events_stream(spark, input_dir), keys=keys)
-    n_batches = [0]
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # partition key = micro-batch id: a retried batch dynamically
-        # OVERWRITES its own partition (idempotent, the standard
-        # exactly-once foreachBatch recipe) and can never clobber rows
-        # another batch appended
-        out = batch_df.withColumn("batch_key", F.lit(batch_id).cast("long"))
-        if out.isEmpty():
-            return
-        store.upsert_stage("stream_dedup", out, "batch_key")
-        n_batches[0] += 1
-
-    q = (
-        deduped.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{root}/_stream_ck_dedup")
-        .trigger(availableNow=True)
-        .start()
+    return drain_to_lineage(
+        deduped,
+        LineageStore(spark, root),
+        "stream_dedup",
+        "batch_key",
+        None,
+        f"{root}/_stream_ck_dedup",
     )
-    q.awaitTermination()
-    return {"batches": n_batches[0]}

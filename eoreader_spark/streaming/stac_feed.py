@@ -5,8 +5,9 @@ storage (the exact layout `sources/stac.write_stac_catalog` produces:
 ``root/items/<image_id>.json``); this module tails that directory as a
 Structured Streaming FILE SOURCE, so newly published scenes are
 discovered incrementally, parsed with the same explicit schema as the
-batch path, and folded into windowed arrival statistics and the shared
-LineageStore — one resume/metrics story for batch and streaming.
+batch path, folded into windowed arrival statistics and committed per
+micro-batch by ``events.drain_to_lineage`` — the same drain, and the same
+LineageStore commit body, as every other stream and batch stage.
 
 Reference analog: eoreader's Reader.open on a STAC item
 (/root/reference/eoreader/reader.py:673-738) is a batch pull of one
@@ -31,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..lineage import LineageStore
 from ..sources import stac
+from .events import drain_to_lineage
 
 
 def read_stac_item_stream(
@@ -86,33 +88,21 @@ def run_stac_feed_to_lineage(
     watermark: str = "2 days",
     max_files_per_trigger: int | None = None,
 ) -> dict:
-    """availableNow pipeline: item feed -> windowed arrivals -> per-batch
-    upsert into the shared LineageStore (stage='stream_stac', key = day
-    bucket).  Complete-mode re-emits corrected totals for already-seen
-    windows, so the sink upserts rather than skipping committed buckets
-    (the same contract as run_windowed_to_lineage)."""
-    store = LineageStore(spark, store_root)
+    """availableNow pipeline: item feed -> windowed arrivals ->
+    events.drain_to_lineage (stage='stream_stac', key = day bucket).
+    Complete mode re-emits corrected totals for already-seen windows, so
+    the drain's upsert replaces them (as in run_windowed_to_lineage)."""
     agg = windowed_arrivals(
         read_stac_item_stream(spark, items_dir, max_files_per_trigger),
         window=window,
         watermark=watermark,
     )
-    metrics = {"batches": 0, "rows": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df.withColumn(
-            "bucket", (F.unix_timestamp("window_start") / 86400).cast("long")
-        )
-        r = store.upsert_stage("stream_stac", out, "bucket")
-        metrics["batches"] += 1
-        metrics["rows"] += r["rows_written"]
-
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .option("checkpointLocation", f"{store_root}/_stream_stac_ck")
-        .trigger(availableNow=True)
-        .start()
+    return drain_to_lineage(
+        agg,
+        LineageStore(spark, store_root),
+        "stream_stac",
+        "bucket",
+        F.unix_timestamp("window_start") / 86400,
+        f"{store_root}/_stream_stac_ck",
+        output_mode="complete",
     )
-    q.awaitTermination()
-    return metrics

@@ -46,7 +46,7 @@ def test_assign_uses_broadcast_join(spark):
 
     tiles = datagen.gen_tiles(spark, 20)
     aoi = datagen.gen_aoi(spark, 20)
-    plan = _plan(assign.assign_tiles(tiles, aoi, force_strategy="broadcast"))
+    plan = _plan(assign.assign_tiles(tiles, aoi))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 

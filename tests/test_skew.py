@@ -52,11 +52,6 @@ def test_salting_spreads_hot_keys(spark):
 def test_salted_equals_broadcast_on_skewed_data(spark):
     tiles = datagen.gen_tiles(spark, N)
     aoi = datagen.gen_aoi(spark, N)
-    a = {tuple(r) for r in assign.assign_tiles(tiles, aoi, force_strategy="broadcast").collect()}
-    b = {
-        tuple(r)
-        for r in assign.assign_tiles(
-            tiles, aoi, force_strategy="salted", skew_factor=2.0
-        ).collect()
-    }
+    a = {tuple(r) for r in assign.assign_tiles(tiles, aoi).collect()}
+    b = {tuple(r) for r in assign._assign_salted(tiles, aoi, 2.0, assign.N_SALTS).collect()}
     assert a == b and len(a) > 0

@@ -71,13 +71,12 @@ def test_tile_assignment_matches_oracle_all_strategies(spark, tables):
     paths, vs the brute-force oracle (BASELINE.json:2,6)."""
     aoi_rows = [(r.aoi_id, r.geom_wkt) for r in tables["aoi"].select("aoi_id", "geom_wkt").collect()]
     want = _oracle_assignments(N, aoi_rows)
-    for strategy in ("broadcast", "salted"):
-        got = {
-            (r.aoi_id, r.image_id, r.tile_x, r.tile_y)
-            for r in assign.assign_tiles(
-                tables["tiles"], tables["aoi"], force_strategy=strategy, skew_factor=0.5
-            ).collect()
-        }
+    legs = {
+        "broadcast": assign.assign_tiles(tables["tiles"], tables["aoi"]),
+        "salted": assign._assign_salted(tables["tiles"], tables["aoi"], 0.5, assign.N_SALTS),
+    }
+    for strategy, df in legs.items():
+        got = {(r.aoi_id, r.image_id, r.tile_x, r.tile_y) for r in df.collect()}
         assert got == want, strategy
     want_join = {(a, i) for a, i, _, _ in want}
     got_join = {

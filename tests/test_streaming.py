@@ -163,6 +163,27 @@ def test_stream_dedup_matches_batch(spark, tmp_path):
     assert {r.event_id for r in got.select("event_id").collect()} == want
 
 
+def test_stream_dedup_redelivery_commits_nothing(spark, tmp_path):
+    """A later run that only sees a re-delivered file gets all-duplicate
+    micro-batches: the drain must commit no batch, append no lineage row
+    and leave the stored rows as they were."""
+    from eoreader_spark.lineage import LineageStore
+
+    src = spark.read.parquet(f"{SF}/events.parquet").orderBy("event_id").limit(200)
+    in_dir = str(tmp_path / "in_dup")
+    root = str(tmp_path / "ckd")
+    src.coalesce(1).write.mode("append").parquet(in_dir)
+    assert ev.run_dedup_to_lineage(spark, in_dir, root)["batches"] >= 1
+    store = LineageStore(spark, root)
+    lineage_rows = store.lineage().count()
+
+    src.coalesce(1).write.mode("append").parquet(in_dir)  # re-delivery
+    metrics = ev.run_dedup_to_lineage(spark, in_dir, root)
+    assert metrics["batches"] == 0
+    assert store.lineage().count() == lineage_rows
+    assert store.read_stage("stream_dedup").count() == 200
+
+
 def test_stac_feed_matches_batch(spark, tmp_path):
     """Round 8: the streaming STAC item feed (file-source tail of the
     items/ directory) parses with the batch schema and its windowed
