@@ -66,7 +66,9 @@ CELL_SQL = (
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    from eoreader_spark.session import read_parquet
+
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _events_points(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -465,14 +465,6 @@ def needed_bands(index_names: list[str]) -> list[str]:
     return out
 
 
-def decode_planes(pdf: pd.DataFrame) -> list[np.ndarray]:
-    """Decode a batch's `bytes` column -> list of (PLANES,h,w) float32 arrays."""
-    out = []
-    for data, fmt, h, w in zip(pdf["bytes"], pdf["fmt"], pdf["h"], pdf["w"]):
-        out.append(codecs.decode(bytes(data), fmt, int(h), int(w)).astype(np.float32))
-    return out
-
-
 def to_reflectance(plane: np.ndarray) -> np.ndarray:
     return (plane + REFL_OFFSET) / REFL_QUANTIF
 
@@ -508,8 +500,11 @@ def stats_kernel(
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
-        for iid, img in zip(pdf["image_id"], decode_planes(pdf)):
-            bands = {b: to_reflectance(img[pmap[b]]) for b in needs}
+        for iid, data, fmt, h, w in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"],
+                                        pdf["h"], pdf["w"]):
+            img = codecs.decode(bytes(data), fmt, int(h), int(w))
+            # cast only the planes some index reads, not the whole stack
+            bands = {b: to_reflectance(img[pmap[b]].astype(np.float32)) for b in needs}
             for n in names:
                 v = fns[n](bands, **params.get(n, {})).astype(np.float64)
                 rows.append((iid, n, float(v.mean()), float(v.min()), float(v.max())))

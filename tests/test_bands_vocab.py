@@ -107,6 +107,36 @@ def test_every_catalog_index_evaluates_finite():
         assert mn <= mean <= mx, n
 
 
+def test_stats_kernel_eight_planes_matches_full_cast():
+    """stats_kernel casts only the planes its indices read; its rows are
+    bit-identical to a kernel that casts the whole decoded stack."""
+    import pandas as pd
+
+    pm = dict(zip(["CA", "BLUE", "GREEN", "RED", "VRE_1", "NIR", "SWIR_1", "SWIR_2"],
+                  range(8)))
+    names = ["NDVI", "NBR", "MNDWI", "EVI"]
+    h, w = 32, 48
+    imgs = [codecs.make_image(1, h, w, planes=8),
+            codecs.make_image(2, h, w, planes=8).astype(np.uint16) * 257,
+            codecs.make_image(3, h, w, planes=8)]
+    fmts = ["raw8", "tiff", "jpeg"]
+    pdf = pd.DataFrame({"image_id": ["a", "b", "c"],
+                        "bytes": [codecs.encode(im, f) for im, f in zip(imgs, fmts)],
+                        "fmt": fmts, "h": h, "w": w})
+    got = indices.stats_kernel(names, plane_map=pm)(pdf)
+
+    rows = []
+    for iid, data, fmt in zip(pdf["image_id"], pdf["bytes"], fmts):
+        img = codecs.decode(data, fmt, h, w).astype(np.float32)  # every plane
+        planes = {b: indices.to_reflectance(img[p]) for b, p in pm.items()}
+        for n in names:
+            v = indices.INDEX_REGISTRY[n][1](planes).astype(np.float64)
+            rows.append((iid, n, float(v.mean()), float(v.min()), float(v.max())))
+    want = pd.DataFrame(rows, columns=got.columns)
+    assert codecs.decode(pdf["bytes"][1], "tiff", h, w).dtype == np.uint16
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
 def test_index_stats_multispectral_engine_parity(spark):
     """index_stats over real decoded S2_L2A images == the numpy oracle."""
     images = datagen.gen_images(spark, 4, layout="S2_L2A")

@@ -180,15 +180,10 @@ for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 def work(files):
     import pyarrow.parquet as pq
     from eoreader_spark.functions import indices
-    names = ["NDVI", "NDWI", "EVI", "SAVI", "TCBRI"]
-    entries = {k: indices.INDEX_REGISTRY[k] for k in names}
-    needs = indices.needed_bands(names)
+    # the Spark leg's kernel (mean/min/max per index), so both legs do the same work
+    kernel = indices.stats_kernel(["NDVI", "NDWI", "EVI", "SAVI", "TCBRI"])
     for f in files:
-        pdf = pq.read_table(f, columns=["image_id", "bytes", "fmt", "h", "w"]).to_pandas()
-        for iid, img in zip(pdf["image_id"], indices.decode_planes(pdf)):
-            bands = {b: indices.to_reflectance(img[indices.PLANE_OF[b]]) for b in needs}
-            for nm in names:
-                entries[nm][1](bands).mean()
+        kernel(pq.read_table(f, columns=indices.STATS_INPUT).to_pandas())
     return 1
 
 base, n = sys.argv[1], int(sys.argv[2])
