@@ -926,31 +926,42 @@ def q_xml_mtd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_warp_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6/W5 warp+resample on the hard gate, VALUE-EXACT: decode plane 0 of
-    8 lossless images into tile rows, warp under an integer pixel-shift
-    affine (dst identity, src ground = pixel - (3,5)) with nearest
-    resampling — out[y,x] = src_tile[y+5, x+3], NaN outside the tile — and
-    reduce to per-image valid-count + integer pixel sum.  The oracle
-    replicates the shifted closed-form pixel function."""
+# (image_id, seed, h, w) of the 8 lossless (raw8/png) images among the first
+# 12 datagen images, dims from datagen.image_dims: the oracles' twin of
+# `_lossless_tiles`
+_LOSSLESS_IMGS_SQL = """(VALUES
+                ('img000000000000', 0, 64, 64),
+                ('img000000000001', 1, 64, 64),
+                ('img000000000003', 3, 128, 64),
+                ('img000000000004', 4, 128, 64),
+                ('img000000000006', 6, 256, 64),
+                ('img000000000007', 7, 256, 128),
+                ('img000000000009', 9, 64, 128),
+                ('img000000000010', 10, 64, 128))"""
+
+
+def _lossless_tiles(spark: SparkSession) -> DataFrame:
+    """Plane-0 tile rows of the 8 lossless (raw8/png) images among the first
+    12 datagen images: the shared input of the warp, ortho, radiometric and
+    mosaic gates."""
     from eoreader_spark import datagen
-    from eoreader_spark.operators import raster, warp
+    from eoreader_spark.operators import raster
 
     images = datagen.gen_images(spark, 12).filter(F.col("fmt") != "jpeg")
-    tiles = raster.tiles_from_images(images, plane=0)
-    warped = warp.warp_affine(
-        tiles,
-        src_transform=warp.Affine(1, 0, -3, 0, 1, -5),
-        dst_transform=warp.Affine(1, 0, 0, 0, 1, 0),
-        method="nearest",
-    )
+    return raster.tiles_from_images(images, plane=0)
+
+
+def _valid_px_stats(warped: DataFrame, scale: int = 1, alias: str = "px_sum") -> DataFrame:
+    """The warp gates' shared reduction: per image the pixel count, the
+    non-NaN count and, as `alias`, the integer sum of scale * each valid
+    pixel (scale 4 keeps bilinear quarter-integers exact)."""
     valid = F.filter("px", lambda x: ~F.isnan(x))
     per_tile = warped.select(
         "image_id",
         F.size("px").cast("long").alias("n"),
         F.size(valid).alias("nv"),
         F.aggregate(
-            F.transform(valid, lambda x: x.cast("long")),
+            F.transform(valid, lambda x: (x * scale).cast("long")),
             F.lit(0).cast("long"),
             lambda a, x: a + x,
         ).alias("s"),
@@ -960,10 +971,50 @@ def q_warp_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum("n").alias("n_px"),
             F.sum("nv").cast("long").alias("n_valid"),
-            F.sum("s").alias("px_sum"),
+            F.sum("s").alias(alias),
         )
         .orderBy("image_id")
     )
+
+
+def _valid_px_oracle(case_sql: str, v: str = "v", alias: str = "px_sum") -> str:
+    """DuckDB twin of `_valid_px_stats` over `_LOSSLESS_IMGS_SQL`: case_sql
+    states output pixel (y, x), scaled like the Spark side, and is NULL where
+    the warp leaves NaN."""
+    return f"""
+            WITH imgs(image_id, seed, h, w) AS {_LOSSLESS_IMGS_SQL},
+            px AS (
+                SELECT image_id,
+                       {case_sql} AS {v}
+                FROM imgs,
+                     generate_series(0, 255) AS gy(y),
+                     generate_series(0, 255) AS gx(x)
+                WHERE y < h AND x < w
+            )
+            SELECT image_id,
+                   count(*) AS n_px,
+                   count({v}) AS n_valid,
+                   cast(sum(coalesce({v}, 0)) AS BIGINT) AS {alias}
+            FROM px GROUP BY image_id ORDER BY image_id
+        """
+
+
+def q_warp_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J6/W5 warp+resample on the hard gate, VALUE-EXACT: decode plane 0 of
+    8 lossless images into tile rows, warp under an integer pixel-shift
+    affine (dst identity, src ground = pixel - (3,5)) with nearest
+    resampling — out[y,x] = src_tile[y+5, x+3], NaN outside the tile — and
+    reduce to per-image valid-count + integer pixel sum.  The oracle
+    replicates the shifted closed-form pixel function."""
+    from eoreader_spark.operators import warp
+
+    warped = warp.warp_affine(
+        _lossless_tiles(spark),
+        src_transform=warp.Affine(1, 0, -3, 0, 1, -5),
+        dst_transform=warp.Affine(1, 0, 0, 0, 1, 0),
+        method="nearest",
+    )
+    return _valid_px_stats(warped)
 
 
 def q_warp_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -972,37 +1023,15 @@ def q_warp_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter-integers (no float rounding anywhere, any summation order);
     out[y,x] = mean of the 4 pixels at (y+1..2, x+2..3), NaN outside the
     tile interior.  Oracle replays it from the closed-form pixel fn."""
-    from eoreader_spark import datagen
-    from eoreader_spark.operators import raster, warp
+    from eoreader_spark.operators import warp
 
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") != "jpeg")
-    tiles = raster.tiles_from_images(images, plane=0)
     warped = warp.warp_affine(
-        tiles,
+        _lossless_tiles(spark),
         src_transform=warp.Affine(1, 0, -2.5, 0, 1, -1.5),
         dst_transform=warp.Affine(1, 0, 0, 0, 1, 0),
         method="bilinear",
     )
-    valid = F.filter("px", lambda x: ~F.isnan(x))
-    per_tile = warped.select(
-        "image_id",
-        F.size("px").cast("long").alias("n"),
-        F.size(valid).alias("nv"),
-        F.aggregate(
-            F.transform(valid, lambda x: (x * 4).cast("long")),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        ).alias("s4"),
-    )
-    return (
-        per_tile.groupBy("image_id")
-        .agg(
-            F.sum("n").alias("n_px"),
-            F.sum("nv").cast("long").alias("n_valid"),
-            F.sum("s4").alias("px4_sum"),
-        )
-        .orderBy("image_id")
-    )
+    return _valid_px_stats(warped, 4, "px4_sum")
 
 
 def _ivf_centroids():
@@ -1830,11 +1859,9 @@ def q_ortho_rpc(spark: SparkSession, sf_dir: str) -> DataFrame:
     resampling on integers is exact in any float width.  Exercises the real
     J3 tile-key DEM join + RPC broadcast + resample kernel
     (mirrors /root/reference/eoreader/products/product.py:2842-2909)."""
-    from eoreader_spark import datagen
-    from eoreader_spark.operators import raster, warp
+    from eoreader_spark.operators import warp
 
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") != "jpeg")
-    tiles = raster.tiles_from_images(images, plane=0)
+    tiles = _lossless_tiles(spark)
     dem = tiles.selectExpr(
         "image_id", "tile_x", "tile_y",
         "transform(sequence(0, 4095), k -> cast("
@@ -1845,26 +1872,7 @@ def q_ortho_rpc(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = warp.orthorectify(
         tiles, dem, rpc, dst_transform=warp.Affine(1, 0, 0, 0, 1, 0), method="nearest"
     )
-    valid = F.filter("px", lambda x: ~F.isnan(x))
-    per_tile = out.select(
-        "image_id",
-        F.size("px").cast("long").alias("n"),
-        F.size(valid).alias("nv"),
-        F.aggregate(
-            F.transform(valid, lambda x: x.cast("long")),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        ).alias("s"),
-    )
-    return (
-        per_tile.groupBy("image_id")
-        .agg(
-            F.sum("n").alias("n_px"),
-            F.sum("nv").cast("long").alias("n_valid"),
-            F.sum("s").alias("px_sum"),
-        )
-        .orderBy("image_id")
-    )
+    return _valid_px_stats(out)
 
 
 def q_per_band_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1933,37 +1941,14 @@ def q_sar_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ortho_oracle() -> str:
-    # the 8 lossless images (raw8/png seeds); valid iff the shifted sample
-    # stays inside the SOURCE TILE (tile-local resample, like warp_shift)
-    return """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000001', 1, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000004', 4, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000007', 7, 256, 128),
-                ('img000000000009', 9, 64, 128),
-                ('img000000000010', 10, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       CASE WHEN (x % 64) + 3 + ((x + y) % 3) <= 63
+    # valid iff the shifted sample stays inside the SOURCE TILE (tile-local
+    # resample, like warp_shift)
+    return _valid_px_oracle("""CASE WHEN (x % 64) + 3 + ((x + y) % 3) <= 63
                              AND (y % 64) + 5 + ((x + y) % 3) <= 63
                             THEN (seed*7 + (x + 3 + ((x + y) % 3))*13
                                   + (y + 5 + ((x + y) % 3))*17
                                   + ((x + 3 + ((x + y) % 3)) * (y + 5 + ((x + y) % 3))) % 29) % 256
-                       END AS v
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
-            SELECT image_id,
-                   count(*) AS n_px,
-                   count(v) AS n_valid,
-                   cast(sum(coalesce(v, 0)) AS BIGINT) AS px_sum
-            FROM px GROUP BY image_id ORDER BY image_id
-        """
+                       END""")
 
 
 def _per_band_mask_oracle() -> str:
@@ -2124,15 +2109,6 @@ def _sar_noise_oracle() -> str:
 # -------------------------------------------- F3/F4, S12, X-family, A5, S2
 _BT_K1, _BT_K2 = 774.89, 1321.08  # Landsat-8 TIRS band-10 constants (public)
 _TOA_COEF = __import__("math").pi / (1500.0 * __import__("math").cos(__import__("math").radians(30.0)))
-_LOSSLESS_IMGS_SQL = """(VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000001', 1, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000004', 4, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000007', 7, 256, 128),
-                ('img000000000009', 9, 64, 128),
-                ('img000000000010', 10, 64, 128))"""
 
 
 def q_radiometric_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2142,13 +2118,9 @@ def q_radiometric_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical double sequence, so floor-scaled sums are bit-exact; BT
     crosses libm ln, so it rounds at 1e-4 where the worst-case margin over
     all 256 DN values is 1.9e-3 (scanned in tests/test_stencil_gate.py)."""
-    from eoreader_spark import datagen
     from eoreader_spark.functions import radiometry
-    from eoreader_spark.operators import raster
 
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") != "jpeg")
-    tiles = raster.tiles_from_images(images, plane=0)
-    t = tiles.withColumn("L", radiometry.gain_bias("px", 0.125, 0.125))
+    t = _lossless_tiles(spark).withColumn("L", radiometry.gain_bias("px", 0.125, 0.125))
     t = t.withColumn("bt", radiometry.radiance_to_bt("L", _BT_K1, _BT_K2))
     t = t.withColumn("toa", radiometry.toa_rad_to_refl("L", 1.0, 1500.0, 30.0))
     bt_scaled = F.expr("transform(bt, v -> cast(round(v * 10000) as bigint))")
@@ -2187,11 +2159,9 @@ def q_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S12 VRT-mosaic on the hard gate, VALUE-EXACT: a constant-7 overlay of
     every tile_y=0 tile mosaics OVER the plane-0 tiles (first source wins on
     overlapping tile keys); per-image integer sums replay in SQL."""
-    from eoreader_spark import datagen
-    from eoreader_spark.operators import raster, warp
+    from eoreader_spark.operators import warp
 
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") != "jpeg")
-    tiles = raster.tiles_from_images(images, plane=0)
+    tiles = _lossless_tiles(spark)
     overlay = tiles.filter("tile_y = 0").withColumn(
         "px", F.expr("transform(px, v -> cast(7.0 as float))")
     )
@@ -2993,50 +2963,46 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.connected_components(pairs).orderBy("id")
 
 
-def q_jfif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL lossy container on the hard gate: deterministic images encoded
-    as genuine baseline JPEG (sources/jpegc.py — 8x8 DCT + Annex K
-    quantization/Huffman, pure numpy from the public T.81 spec) decode
-    through the STANDARD tile path (fmt='jfif' in the codec table).  Pixel
-    sums and the squared error vs the closed-form original are integers; the
-    oracle states them from an independent single-process numpy replay, so
-    distributed decode == local decode bit-for-bit.  psnr_ok pins the
-    >=40 dB invariant (BASELINE.json:15) by exact integer compare:
-    PSNR >= 40  <=>  sqerr * 10^4 <= n * 255^2."""
+# JFIF gate image_id prefix -> (n images, (h, w) of even ids, (h, w) of odd
+# ids, chroma subsampling)
+_JFIF_FIXTURES = {
+    "jfif": (8, (64, 64), (128, 64), "444"),
+    "j420_": (6, (64, 128), (128, 64), "420"),
+}
+
+
+def _jfif_gate(spark: SparkSession, prefix: str, wire=lambda j: {}) -> DataFrame:
+    """The JFIF gates' shared body: closed-form make_image(j) fixtures of
+    `_JFIF_FIXTURES[prefix]`, encoded at quality 95 with the extra
+    encode_jfif options wire(j), decode through the STANDARD tile path
+    (fmt='jfif').  Per image: pixel count, integer pixel sum, squared error
+    vs the closed-form plane 0 (seed = the id digits after the prefix) and
+    psnr_ok = (sqerr * 10^4 <= n * 255^2), i.e. PSNR >= 40 dB."""
     from collections.abc import Iterator as _It
 
     from eoreader_spark.operators import raster
 
+    n, even, odd, subsampling = _JFIF_FIXTURES[prefix]
+
     def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
         from eoreader_spark import codecs as _c
-
         from eoreader_spark.sources import jpegc as _jc
 
         for pdf in it:
             rows = []
             for j in pdf["id"].astype("int64"):
                 j = int(j)
-                h, w = (64, 64) if j % 2 == 0 else (128, 64)
+                h, w = odd if j % 2 else even
                 img = _c.make_image(j, h, w, planes=3)
-                # odd ids carry DRI/RSTn restart intervals; ids >= 6 are
-                # PROGRESSIVE (SOF2 spectral selection + successive
-                # approximation, round 5).  Decoded pixels are identical to
-                # the plain baseline encode in all three wire layouts
-                # (pinned by test_jfif), so one replay oracle covers all
-                if j >= 6:
-                    data = _jc.encode_jfif(img, 95, progressive=True)
-                elif j % 2:
-                    data = _jc.encode_jfif(img, 95, restart_interval=8)
-                else:
-                    data = _c.encode(img, "jfif")
-                rows.append((f"jfif{j:03d}", data, w, h, "jfif"))
+                data = _jc.encode_jfif(img, 95, subsampling=subsampling, **wire(j))
+                rows.append((f"{prefix}{j:03d}", data, w, h, "jfif"))
             yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
 
-    images = spark.range(8, numPartitions=2).mapInPandas(
+    images = spark.range(n, numPartitions=2).mapInPandas(
         gen, schema="image_id string, bytes binary, w int, h int, fmt string"
     )
     tiles = raster.tiles_from_images(images, plane=0)
-    seed = F.substring("image_id", 5, 3).cast("long")
+    seed = F.substring("image_id", len(prefix) + 1, 3).cast("long")
 
     def sqerr_el(v: F.Column, i: F.Column) -> F.Column:
         x = F.col("tile_x").cast("long") * 64 + (i % 64)
@@ -3062,6 +3028,65 @@ def q_jfif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("image_id")
     )
+
+
+def _jfif_oracle(prefix: str) -> str:
+    """Independent single-process replay: the same public-spec codec run
+    locally in numpy (not through Spark) produces the expected per-image
+    stats as literals; psnr_ok re-derives the 40 dB gate in SQL.  Every id
+    replays the plain layout (no restart interval, not progressive): the
+    Spark side's other wire layouts decode to bit-identical pixels (same
+    quantized coefficients), so the plain replay is the honest expected
+    value for all of them."""
+    from eoreader_spark import codecs as _c
+    from eoreader_spark.sources import jpegc as _j
+
+    n, even, odd, subsampling = _JFIF_FIXTURES[prefix]
+    rows = []
+    for j in range(n):
+        h, w = odd if j % 2 else even
+        img = _c.make_image(j, h, w, planes=3)
+        dec = _j.decode_jfif(_j.encode_jfif(img, 95, subsampling=subsampling))[0].astype(np.int64)
+        orig = img[0].astype(np.int64)
+        rows.append(
+            f"('{prefix}{j:03d}', {dec.size}, {int(dec.sum())}, {int(((dec - orig) ** 2).sum())})"
+        )
+    values = ",\n                ".join(rows)
+    return f"""
+            SELECT image_id, cast(n_px AS BIGINT) AS n_px,
+                   cast(px_sum AS BIGINT) AS px_sum,
+                   cast(sqerr_sum AS BIGINT) AS sqerr_sum,
+                   cast(CASE WHEN sqerr_sum * 10000 <= n_px * 65025
+                             THEN 1 ELSE 0 END AS INTEGER) AS psnr_ok
+            FROM (VALUES
+                {values}
+            ) AS t(image_id, n_px, px_sum, sqerr_sum)
+            ORDER BY image_id
+        """
+
+
+def q_jfif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL lossy container on the hard gate: deterministic images encoded
+    as genuine baseline JPEG (sources/jpegc.py — 8x8 DCT + Annex K
+    quantization/Huffman, pure numpy from the public T.81 spec) decode
+    through the STANDARD tile path (fmt='jfif' in the codec table).  Pixel
+    sums and the squared error vs the closed-form original are integers; the
+    oracle states them from an independent single-process numpy replay, so
+    distributed decode == local decode bit-for-bit.  psnr_ok pins the
+    >=40 dB invariant (BASELINE.json:15) by exact integer compare:
+    PSNR >= 40  <=>  sqerr * 10^4 <= n * 255^2."""
+
+    def wire(j: int) -> dict:
+        # odd ids carry DRI/RSTn restart intervals; ids >= 6 are
+        # PROGRESSIVE (SOF2 spectral selection + successive
+        # approximation, round 5).  Decoded pixels are identical to
+        # the plain baseline encode in all three wire layouts
+        # (pinned by test_jfif), so one replay oracle covers all
+        if j >= 6:
+            return {"progressive": True}
+        return {"restart_interval": 8} if j % 2 else {}
+
+    return _jfif_gate(spark, "jfif", wire)
 
 
 def _jp2_lossy_images() -> list[tuple[str, "np.ndarray"]]:
@@ -3338,38 +3363,6 @@ def _jp2_overview_oracle() -> str:
         """
 
 
-def _jfif_oracle() -> str:
-    """Independent single-process replay: the same public-spec codec run
-    locally in numpy (not through Spark) produces the expected per-image
-    stats as literals; psnr_ok re-derives the 40 dB gate in SQL."""
-    from eoreader_spark import codecs as _c
-
-    rows = []
-    for j in range(8):
-        h, w = (64, 64) if j % 2 == 0 else (128, 64)
-        img = _c.make_image(j, h, w, planes=3)
-        # ids >= 6 are progressive on the Spark side; decoded pixels are
-        # bit-identical to baseline (same quantized coefficients), so the
-        # baseline replay is the honest expected value for all layouts
-        dec = _c.decode(_c.encode(img, "jfif"), "jfif", h, w)[0].astype(np.int64)
-        orig = img[0].astype(np.int64)
-        rows.append(
-            f"('jfif{j:03d}', {dec.size}, {int(dec.sum())}, {int(((dec - orig) ** 2).sum())})"
-        )
-    values = ",\n                ".join(rows)
-    return f"""
-            SELECT image_id, cast(n_px AS BIGINT) AS n_px,
-                   cast(px_sum AS BIGINT) AS px_sum,
-                   cast(sqerr_sum AS BIGINT) AS sqerr_sum,
-                   cast(CASE WHEN sqerr_sum * 10000 <= n_px * 65025
-                             THEN 1 ELSE 0 END AS INTEGER) AS psnr_ok
-            FROM (VALUES
-                {values}
-            ) AS t(image_id, n_px, px_sum, sqerr_sum)
-            ORDER BY image_id
-        """
-
-
 def q_jfif420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round 4: the 4:2:0 SUBSAMPLED interleaved layout of real camera
     JPEGs (SOF0 sampling 0x22/0x11/0x11, one MCU-ordered scan, per-component
@@ -3378,81 +3371,7 @@ def q_jfif420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the worst-case noisy fixture; chroma round-trips are covered by pytest
     (tests/test_jfif.py).  Distributed == independent local replay by exact
     integer sums, like jfif_decode."""
-    from collections.abc import Iterator as _It
-
-    from eoreader_spark.operators import raster
-
-    def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        from eoreader_spark import codecs as _c
-        from eoreader_spark.sources import jpegc as _j
-
-        for pdf in it:
-            rows = []
-            for j in pdf["id"].astype("int64"):
-                j = int(j)
-                h, w = (64, 128) if j % 2 == 0 else (128, 64)
-                img = _c.make_image(j, h, w, planes=3)
-                b = _j.encode_jfif(img, 95, subsampling="420")
-                rows.append((f"j420_{j:03d}", b, w, h, "jfif"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
-
-    images = spark.range(6, numPartitions=2).mapInPandas(
-        gen, schema="image_id string, bytes binary, w int, h int, fmt string"
-    )
-    tiles = raster.tiles_from_images(images, plane=0)
-    seed = F.substring("image_id", 6, 3).cast("long")
-
-    def sqerr_el(v: F.Column, i: F.Column) -> F.Column:
-        x = F.col("tile_x").cast("long") * 64 + (i % 64)
-        y = F.col("tile_y").cast("long") * 64 + F.floor(i / 64).cast("long")
-        orig = F.pmod(seed * 7 + x * 13 + y * 17 + F.pmod(x * y, 29), F.lit(256))
-        d = v.cast("long") - orig
-        return d * d
-
-    add = lambda a, x: a + x  # noqa: E731
-    zero = F.lit(0).cast("long")
-    vsum = F.aggregate(F.expr("transform(px, v -> cast(v as bigint))"), zero, add)
-    esum = F.aggregate(F.transform("px", sqerr_el), zero, add)
-    return (
-        tiles.select(
-            "image_id", F.size("px").cast("long").alias("n"),
-            vsum.alias("s"), esum.alias("e"),
-        )
-        .groupBy("image_id")
-        .agg(F.sum("n").alias("n_px"), F.sum("s").alias("px_sum"), F.sum("e").alias("sqerr_sum"))
-        .withColumn(
-            "psnr_ok",
-            (F.col("sqerr_sum") * 10000 <= F.col("n_px") * 65025).cast("int"),
-        )
-        .orderBy("image_id")
-    )
-
-
-def _jfif420_oracle() -> str:
-    from eoreader_spark import codecs as _c
-    from eoreader_spark.sources import jpegc as _j
-
-    rows = []
-    for j in range(6):
-        h, w = (64, 128) if j % 2 == 0 else (128, 64)
-        img = _c.make_image(j, h, w, planes=3)
-        dec = _j.decode_jfif(_j.encode_jfif(img, 95, subsampling="420"))[0].astype(np.int64)
-        orig = img[0].astype(np.int64)
-        rows.append(
-            f"('j420_{j:03d}', {dec.size}, {int(dec.sum())}, {int(((dec - orig) ** 2).sum())})"
-        )
-    values = ",\n                ".join(rows)
-    return f"""
-            SELECT image_id, cast(n_px AS BIGINT) AS n_px,
-                   cast(px_sum AS BIGINT) AS px_sum,
-                   cast(sqerr_sum AS BIGINT) AS sqerr_sum,
-                   cast(CASE WHEN sqerr_sum * 10000 <= n_px * 65025
-                             THEN 1 ELSE 0 END AS INTEGER) AS psnr_ok
-            FROM (VALUES
-                {values}
-            ) AS t(image_id, n_px, px_sum, sqerr_sum)
-            ORDER BY image_id
-        """
+    return _jfif_gate(spark, "j420_")
 
 
 def q_gcp_ortho(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3461,40 +3380,18 @@ def q_gcp_ortho(spark: SparkSession, sf_dir: str) -> DataFrame:
     given; the fitted transform is the same integer (3,5) shift as
     warp_shift, and lstsq's ~1e-15 noise is irrelevant under nearest
     resampling (0.5 rounding margin)."""
-    from eoreader_spark import datagen
-    from eoreader_spark.operators import raster, warp
+    from eoreader_spark.operators import warp
 
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") != "jpeg")
-    tiles = raster.tiles_from_images(images, plane=0)
     true = warp.Affine(1, 0, -3, 0, 1, -5)
     gcps = []
     for col, row in [(0.0, 0.0), (100.0, 0.0), (0.0, 100.0), (37.0, 81.0)]:
-        import numpy as np
-
         x, y = true.apply(np.array([col]), np.array([row]))
         gcps.append((col, row, float(x[0]), float(y[0])))
     warped = warp.orthorectify_gcps(
-        tiles, gcps, dst_transform=warp.Affine(1, 0, 0, 0, 1, 0), method="nearest"
+        _lossless_tiles(spark), gcps, dst_transform=warp.Affine(1, 0, 0, 0, 1, 0),
+        method="nearest",
     )
-    valid = F.filter("px", lambda x: ~F.isnan(x))
-    per_tile = warped.select(
-        "image_id",
-        F.size("px").cast("long").alias("n"),
-        F.size(valid).alias("nv"),
-        F.aggregate(
-            F.transform(valid, lambda x: x.cast("long")),
-            F.lit(0).cast("long"), lambda a, x: a + x,
-        ).alias("s"),
-    )
-    return (
-        per_tile.groupBy("image_id")
-        .agg(
-            F.sum("n").alias("n_px"),
-            F.sum("nv").cast("long").alias("n_valid"),
-            F.sum("s").alias("px_sum"),
-        )
-        .orderBy("image_id")
-    )
+    return _valid_px_stats(warped)
 
 
 def q_clean_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3643,205 +3540,62 @@ def q_audio_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.audio_stats(media).orderBy("media_id")
 
 
-def _gen_video_media(spark: SparkSession, n_videos: int = 4):
-    """Deterministic Motion-JPEG fixtures: video j has 5+j frames of
-    closed-form make_image(seed=400+j*16+fi) luma content, 64x64 for even j,
-    32x64 for odd j — dims chosen so resize=4 box means divide power-of-two
-    pixel counts (exact in float32).  Round 6: odd-j videos travel inside a
-    REAL MP4 container (fmt='mp4', ISO BMFF with full sample tables,
-    multimodal.encode_mp4_mjpeg); sample bytes are the same JFIFs, so the
-    single-process oracle replay is container-independent."""
-    from collections.abc import Iterator as _It
-
-    def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        from eoreader_spark import codecs as _c
-        from eoreader_spark.operators import multimodal as _m
-
-        for pdf in it:
-            rows = []
-            for j in pdf["id"].astype("int64"):
-                j = int(j)
-                h, w = (64, 64) if j % 2 == 0 else (32, 64)
-                frames = [
-                    _c.make_image(400 + j * 16 + fi, h, w, planes=3)
-                    for fi in range(5 + j)
-                ]
-                if j % 2 == 0:
-                    payload, fmt = _m.encode_mjpeg(frames, quality=90), "mjpeg"
-                else:
-                    payload, fmt = _m.encode_mp4_mjpeg(frames, quality=90), "mp4"
-                rows.append(
-                    (f"vid{j:03d}", "video", payload, fmt, w, h, 0, len(frames))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "bytes", "fmt", "w", "h",
-                         "sample_rate", "n_frames"],
-            )
-
-    from eoreader_spark.operators.multimodal import MEDIA_SCHEMA
-
-    return spark.range(n_videos, numPartitions=2).mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-def q_video_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL Motion-JPEG video on the gate: demux the concatenated-JFIF
-    stream (split_mjpeg marker walk), decode every 2nd frame with the
-    engine's own T.81 baseline codec, 4x4 luma box-mean features.  Each
-    feature times its block pixel count is an integer (power-of-two blocks),
-    so distributed decode == independent single-process replay exactly; the
-    oracle states the per-frame integer stats as literals."""
-    from eoreader_spark.operators import multimodal
-
-    media = _gen_video_media(spark)
-    feats = multimodal.video_frame_sample(media, every_n=2, resize=4)
-    block_px = (F.col("w") / 4 * (F.col("h") / 4)).cast("double")
-    scaled = F.transform("features", lambda x: x * block_px)
-    return (
-        feats.join(media.select("media_id", "w", "h"), "media_id")
-        .select(
-            "media_id",
-            "frame_idx",
-            F.size("features").cast("long").alias("n_feat"),
-            F.aggregate(scaled, F.lit(0.0), lambda a, x: a + x)
-            .cast("long").alias("feat_sum_px"),
-            F.array_min(scaled).cast("long").alias("feat_min_px"),
-            F.array_max(scaled).cast("long").alias("feat_max_px"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-def _video_feats_oracle() -> str:
-    """Independent single-process numpy replay of demux+decode+features."""
+def _mjpeg_frames(j: int):
+    """Motion-JPEG fixture video j: 5+j frames of closed-form
+    make_image(seed=400+j*16+fi) content, 64x64 for even j, 32x64 for odd j
+    — dims chosen so resize=4 box means divide power-of-two pixel counts
+    (exact in float32)."""
     from eoreader_spark import codecs as _c
+
+    h, w = (64, 64) if j % 2 == 0 else (32, 64)
+    return [_c.make_image(400 + j * 16 + fi, h, w, planes=3) for fi in range(5 + j)]
+
+
+def _mjpeg_encode(j: int, frames) -> tuple[bytes, str]:
+    """Round 6: odd-j videos travel inside a REAL MP4 container (fmt='mp4',
+    ISO BMFF with full sample tables, multimodal.encode_mp4_mjpeg); sample
+    bytes are the same JFIFs, so the single-process replay is
+    container-independent."""
+    from eoreader_spark.operators import multimodal as _m
+
+    if j % 2 == 0:
+        return _m.encode_mjpeg(frames, quality=90), "mjpeg"
+    return _m.encode_mp4_mjpeg(frames, quality=90), "mp4"
+
+
+def _mjpeg_replay(frames) -> list:
     from eoreader_spark.operators import multimodal as _m
     from eoreader_spark.sources import jpegc as _j
 
-    rows = []
-    for j in range(4):
-        h, w = (64, 64) if j % 2 == 0 else (32, 64)
-        frames = [_c.make_image(400 + j * 16 + fi, h, w, planes=3) for fi in range(5 + j)]
-        parts = _m.split_mjpeg(_m.encode_mjpeg(frames, quality=90))
-        bh, bw = h // 4, w // 4
-        for fi in range(0, len(parts), 2):
-            luma = _j.decode_jfif(parts[fi])[0].astype(np.float32)
-            feat = luma.reshape(4, bh, 4, bw).mean(axis=(1, 3)).ravel()
-            sc = (feat * (bh * bw)).astype(np.int64)
-            rows.append(
-                f"('vid{j:03d}', {fi}, 16, {int(sc.sum())}, {int(sc.min())}, {int(sc.max())})"
-            )
-    values = ",\n                ".join(rows)
-    return f"""
-            SELECT media_id, cast(frame_idx AS INTEGER) AS frame_idx,
-                   cast(n_feat AS BIGINT) AS n_feat,
-                   cast(feat_sum_px AS BIGINT) AS feat_sum_px,
-                   cast(feat_min_px AS BIGINT) AS feat_min_px,
-                   cast(feat_max_px AS BIGINT) AS feat_max_px
-            FROM (VALUES
-                {values}
-            ) AS t(media_id, frame_idx, n_feat, feat_sum_px, feat_min_px, feat_max_px)
-            ORDER BY media_id, frame_idx
-        """
+    parts = _m.split_mjpeg(_m.encode_mjpeg(frames, quality=90))
+    return [_j.decode_jfif(p)[0] for p in parts]
 
 
-def _gen_h264_media(spark: SparkSession, n_videos: int = 3):
-    """Deterministic intra-H.264-in-MP4 fixtures (round 7): video j has
-    3+j frames of closed-form make_image luma, 32x32 for even j, 32x64 for
-    odd j (dims whose resize=4 blocks hold power-of-two pixel counts, so
-    the float32 box means are exact), encoded by the engine's own baseline intra encoder (avcc) at
-    qp=8 and muxed into a REAL ISO BMFF 'avc1' track with avcC config.
-    Fully deterministic, so a single-process replay is an exact oracle."""
-    from collections.abc import Iterator as _It
-
-    def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        from eoreader_spark import codecs as _c
-        from eoreader_spark.operators import multimodal as _m
-
-        for pdf in it:
-            rows = []
-            for j in pdf["id"].astype("int64"):
-                j = int(j)
-                h, w = (32, 32) if j % 2 == 0 else (32, 64)
-                frames = [
-                    _c.make_image(700 + j * 16 + fi, h, w, planes=1)[0]
-                    for fi in range(3 + j)
-                ]
-                payload = _m.encode_mp4_h264(frames, qp=8)
-                rows.append(
-                    (f"avc{j:03d}", "video", payload, "mp4", w, h, 0, len(frames))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "bytes", "fmt", "w", "h",
-                         "sample_rate", "n_frames"],
-            )
-
-    schema = ("media_id string, kind string, bytes binary, fmt string, w int,"
-              " h int, sample_rate int, n_frames int")
-    return spark.range(n_videos).repartition(n_videos).mapInPandas(gen, schema)
-
-
-def q_h264_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL intra H.264 video on the gate (round-7 VERDICT #6a): 'avc1'
-    MP4 tracks demuxed via avcC + length-prefixed NALs, every 2nd frame
-    decoded by the engine's own CAVLC/I_16x16 decoder, 4x4 luma box-mean
-    features.  Same integer-exact feature framing as video_feats; the
-    oracle replays encode+decode single-process (the codec is
-    deterministic end to end)."""
-    from eoreader_spark.operators import multimodal
-
-    media = _gen_h264_media(spark)
-    feats = multimodal.video_frame_sample(media, every_n=2, resize=4)
-    block_px = (F.col("w") / 4 * (F.col("h") / 4)).cast("double")
-    scaled = F.transform("features", lambda x: x * block_px)
-    return (
-        feats.join(media.select("media_id", "w", "h"), "media_id")
-        .select(
-            "media_id",
-            "frame_idx",
-            F.size("features").cast("long").alias("n_feat"),
-            F.aggregate(scaled, F.lit(0.0), lambda a, x: a + x)
-            .cast("long").alias("feat_sum_px"),
-            F.array_min(scaled).cast("long").alias("feat_min_px"),
-            F.array_max(scaled).cast("long").alias("feat_max_px"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-def _h264_feats_oracle() -> str:
-    """Single-process replay: own encoder -> MP4 demux -> own decoder."""
+def _avc1_frames(j: int):
+    """Intra-H.264-in-MP4 fixture video j (round 7): 3+j frames of
+    closed-form make_image luma, 32x32 for even j, 32x64 for odd j (dims
+    whose resize=4 blocks hold power-of-two pixel counts, so the float32 box
+    means are exact)."""
     from eoreader_spark import codecs as _c
+
+    h, w = (32, 32) if j % 2 == 0 else (32, 64)
+    return [_c.make_image(700 + j * 16 + fi, h, w, planes=1)[0] for fi in range(3 + j)]
+
+
+def _avc1_encode(j: int, frames) -> tuple[bytes, str]:
+    """The engine's own baseline intra encoder (avcc) at qp=8, muxed into a
+    REAL ISO BMFF 'avc1' track with avcC config."""
+    from eoreader_spark.operators import multimodal as _m
+
+    return _m.encode_mp4_h264(frames, qp=8), "mp4"
+
+
+def _avc1_replay(frames) -> list:
     from eoreader_spark.operators import multimodal as _m
     from eoreader_spark.sources import avcc as _a
 
-    rows = []
-    for j in range(3):
-        h, w = (32, 32) if j % 2 == 0 else (32, 64)
-        frames = [_c.make_image(700 + j * 16 + fi, h, w, planes=1)[0]
-                  for fi in range(3 + j)]
-        parts = _m.split_mp4_avc1(_m.encode_mp4_h264(frames, qp=8))
-        bh, bw = h // 4, w // 4
-        for fi in range(0, len(parts), 2):
-            luma = _a.decode_h264(parts[fi])[0].astype(np.float32)
-            feat = luma.reshape(4, bh, 4, bw).mean(axis=(1, 3)).ravel()
-            sc = (feat * (bh * bw)).astype(np.int64)
-            rows.append(
-                f"('avc{j:03d}', {fi}, 16, {int(sc.sum())}, {int(sc.min())}, {int(sc.max())})"
-            )
-    values = ",\n                ".join(rows)
-    return f"""
-            SELECT media_id, cast(frame_idx AS INTEGER) AS frame_idx,
-                   cast(n_feat AS BIGINT) AS n_feat,
-                   cast(feat_sum_px AS BIGINT) AS feat_sum_px,
-                   cast(feat_min_px AS BIGINT) AS feat_min_px,
-                   cast(feat_max_px AS BIGINT) AS feat_max_px
-            FROM (VALUES
-                {values}
-            ) AS t(media_id, frame_idx, n_feat, feat_sum_px, feat_min_px, feat_max_px)
-            ORDER BY media_id, frame_idx
-        """
+    parts = _m.split_mp4_avc1(_m.encode_mp4_h264(frames, qp=8))
+    return [_a.decode_h264(p)[0] for p in parts]
 
 
 def _h264_gop_frames(j: int):
@@ -3855,295 +3609,6 @@ def _h264_gop_frames(j: int):
     h, w = (32, 32) if j % 2 == 0 else (32, 64)
     base = _c.make_image(900 + j * 16, h, w, planes=1)[0]
     return [np.roll(base, (fi * 3, fi * 5), axis=(0, 1)) for fi in range(6)]
-
-
-def _gen_h264_gop_media(spark: SparkSession, n_videos: int = 3):
-    """Deterministic GOP-structured raw Annex-B H.264 fixtures (round 8):
-    video j = 6 rolled-base frames encoded by the engine's own encoder at
-    qp=8 with gop=3, i.e. frames 0/3 are IDR slices and 1/2/4/5 are P
-    slices (P_Skip / P_L0_16x16, single reference, quarter-pel MC).  Fully
-    deterministic end to end, so a single-process replay is an exact
-    oracle."""
-    from collections.abc import Iterator as _It
-
-    def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        from eoreader_spark.sources import avcc as _a
-
-        for pdf in it:
-            rows = []
-            for j in pdf["id"].astype("int64"):
-                j = int(j)
-                frames = _h264_gop_frames(j)
-                h, w = frames[0].shape
-                payload = _a.encode_h264(frames, qp=8, gop=3)
-                rows.append(
-                    (f"gop{j:03d}", "video", payload, "h264", w, h, 0,
-                     len(frames))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "bytes", "fmt", "w", "h",
-                         "sample_rate", "n_frames"],
-            )
-
-    schema = ("media_id string, kind string, bytes binary, fmt string, w int,"
-              " h int, sample_rate int, n_frames int")
-    return spark.range(n_videos).repartition(n_videos).mapInPandas(gen, schema)
-
-
-def q_h264_gop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL inter H.264 on the gate (round-8 VERDICT #1): GOP-structured
-    Annex-B streams (IDR + P slices, single reference, CAVLC, quarter-pel
-    MC per ISO 14496-10 8.4) decoded by the engine's own decoder inside
-    video_frame_sample; every_n=2 with gop=3 samples frames 0 (IDR), 2 (a
-    P frame two predictions deep) and 4 (P after the mid-stream IDR), so a
-    wrong MC interpolation tap, MV predictor or reference hand-off breaks
-    the hash.  Same integer-exact feature framing as h264_feats; the
-    oracle replays encode+decode single-process (the codec is
-    deterministic end to end)."""
-    from eoreader_spark.operators import multimodal
-
-    media = _gen_h264_gop_media(spark)
-    feats = multimodal.video_frame_sample(media, every_n=2, resize=4)
-    block_px = (F.col("w") / 4 * (F.col("h") / 4)).cast("double")
-    scaled = F.transform("features", lambda x: x * block_px)
-    return (
-        feats.join(media.select("media_id", "w", "h"), "media_id")
-        .select(
-            "media_id",
-            "frame_idx",
-            F.size("features").cast("long").alias("n_feat"),
-            F.aggregate(scaled, F.lit(0.0), lambda a, x: a + x)
-            .cast("long").alias("feat_sum_px"),
-            F.array_min(scaled).cast("long").alias("feat_min_px"),
-            F.array_max(scaled).cast("long").alias("feat_max_px"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-def _h264_gop_oracle() -> str:
-    """Single-process replay: own encoder (gop=3) -> own P-frame decoder."""
-    from eoreader_spark.sources import avcc as _a
-
-    rows = []
-    for j in range(3):
-        frames = _h264_gop_frames(j)
-        h, w = frames[0].shape
-        decoded = _a.decode_h264(_a.encode_h264(frames, qp=8, gop=3))
-        bh, bw = h // 4, w // 4
-        for fi in range(0, len(decoded), 2):
-            luma = decoded[fi].astype(np.float32)
-            feat = luma.reshape(4, bh, 4, bw).mean(axis=(1, 3)).ravel()
-            sc = (feat * (bh * bw)).astype(np.int64)
-            rows.append(
-                f"('gop{j:03d}', {fi}, 16, {int(sc.sum())}, {int(sc.min())}, {int(sc.max())})"
-            )
-    values = ",\n                ".join(rows)
-    return f"""
-            SELECT media_id, cast(frame_idx AS INTEGER) AS frame_idx,
-                   cast(n_feat AS BIGINT) AS n_feat,
-                   cast(feat_sum_px AS BIGINT) AS feat_sum_px,
-                   cast(feat_min_px AS BIGINT) AS feat_min_px,
-                   cast(feat_max_px AS BIGINT) AS feat_max_px
-            FROM (VALUES
-                {values}
-            ) AS t(media_id, frame_idx, n_feat, feat_sum_px, feat_min_px, feat_max_px)
-            ORDER BY media_id, frame_idx
-        """
-
-
-def _gen_h264_db_media(spark: SparkSession, n_videos: int = 3):
-    """Round-8 deblocking fixtures: the h264_gop GOP layout re-encoded at a
-    coarse qp with the in-loop deblocking filter ENABLED (idc 0 in the
-    slice headers; the encoder reconstructs its references through the
-    same clause-8.7 filter the decoder applies), so the gate pins the
-    filter across both the IDR path and the filtered-reference P
-    hand-off."""
-    from collections.abc import Iterator as _It
-
-    def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        from eoreader_spark.sources import avcc as _a
-
-        for pdf in it:
-            rows = []
-            for j in pdf["id"].astype("int64"):
-                j = int(j)
-                frames = _h264_gop_frames(j)
-                h, w = frames[0].shape
-                payload = _a.encode_h264(frames, qp=32, gop=3, deblock=True)
-                rows.append(
-                    (f"db{j:03d}", "video", payload, "h264", w, h, 0,
-                     len(frames))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "bytes", "fmt", "w", "h",
-                         "sample_rate", "n_frames"],
-            )
-
-    return (
-        spark.range(n_videos, numPartitions=n_videos)
-        .mapInPandas(gen, schema=(
-            "media_id string, kind string, bytes binary, fmt string,"
-            " w int, h int, sample_rate int, n_frames int"))
-    )
-
-
-def q_h264_deblock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """In-loop deblocking on the gate (round 8): GOP streams encoded at a
-    coarse qp with the clause-8.7 filter active, decoded by
-    video_frame_sample through the engine's own decoder.  Any defect in
-    the boundary-strength rules, threshold tables, strong/clipped edge
-    filters, the MB-sequential edge order or the filtered-reference P
-    hand-off shifts decoded pixels and breaks the hash.  Same
-    integer-exact feature framing as h264_gop; replay oracle."""
-    from eoreader_spark.operators import multimodal
-
-    media = _gen_h264_db_media(spark)
-    feats = multimodal.video_frame_sample(media, every_n=2, resize=4)
-    block_px = (F.col("w") / 4 * (F.col("h") / 4)).cast("double")
-    scaled = F.transform("features", lambda x: x * block_px)
-    return (
-        feats.join(media.select("media_id", "w", "h"), "media_id")
-        .select(
-            "media_id",
-            "frame_idx",
-            F.size("features").cast("long").alias("n_feat"),
-            F.aggregate(scaled, F.lit(0.0), lambda a, x: a + x)
-            .cast("long").alias("feat_sum_px"),
-            F.array_min(scaled).cast("long").alias("feat_min_px"),
-            F.array_max(scaled).cast("long").alias("feat_max_px"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-def _h264_deblock_oracle() -> str:
-    """Single-process replay: own encoder (deblock on) -> own decoder."""
-    from eoreader_spark.sources import avcc as _a
-
-    rows = []
-    for j in range(3):
-        frames = _h264_gop_frames(j)
-        h, w = frames[0].shape
-        decoded = _a.decode_h264(
-            _a.encode_h264(frames, qp=32, gop=3, deblock=True))
-        bh, bw = h // 4, w // 4
-        for fi in range(0, len(decoded), 2):
-            luma = decoded[fi].astype(np.float32)
-            feat = luma.reshape(4, bh, 4, bw).mean(axis=(1, 3)).ravel()
-            sc = (feat * (bh * bw)).astype(np.int64)
-            rows.append(
-                f"('db{j:03d}', {fi}, 16, {int(sc.sum())}, {int(sc.min())}, {int(sc.max())})"
-            )
-    values = ",\n                ".join(rows)
-    return f"""
-            SELECT media_id, cast(frame_idx AS INTEGER) AS frame_idx,
-                   cast(n_feat AS BIGINT) AS n_feat,
-                   cast(feat_sum_px AS BIGINT) AS feat_sum_px,
-                   cast(feat_min_px AS BIGINT) AS feat_min_px,
-                   cast(feat_max_px AS BIGINT) AS feat_max_px
-            FROM (VALUES
-                {values}
-            ) AS t(media_id, frame_idx, n_feat, feat_sum_px, feat_min_px, feat_max_px)
-            ORDER BY media_id, frame_idx
-        """
-
-
-def _gen_h264_i4_media(spark: SparkSession, n_videos: int = 3):
-    """Round-8 (late) I_4x4 fixtures: the GOP layout with intra frames
-    coded as all-I_4x4 macroblocks (per-block directional prediction,
-    most-probable-mode signalling, Table 9-4 INTRA CBP) — the dominant
-    intra MB class in real encoder output; P frames predict from the
-    I_4x4 reconstruction, pinning the cross-class reference hand-off."""
-    from collections.abc import Iterator as _It
-
-    def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        from eoreader_spark.sources import avcc as _a
-
-        for pdf in it:
-            rows = []
-            for j in pdf["id"].astype("int64"):
-                j = int(j)
-                frames = _h264_gop_frames(j)
-                h, w = frames[0].shape
-                payload = _a.encode_h264(frames, qp=12, gop=3, intra4x4=True)
-                rows.append(
-                    (f"i4{j:03d}", "video", payload, "h264", w, h, 0,
-                     len(frames))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "bytes", "fmt", "w", "h",
-                         "sample_rate", "n_frames"],
-            )
-
-    return (
-        spark.range(n_videos, numPartitions=n_videos)
-        .mapInPandas(gen, schema=(
-            "media_id string, kind string, bytes binary, fmt string,"
-            " w int, h int, sample_rate int, n_frames int"))
-    )
-
-
-def q_h264_i4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """I_4x4 intra decoding on the gate (round 8, late): GOP streams whose
-    intra frames are all-I_4x4; a defect in any of the nine 8.3.1.2
-    prediction modes, the most-probable-mode derivation, the INTRA CBP
-    table or the z-scan reconstruction order shifts pixels and breaks the
-    hash.  Same framing as h264_gop; replay oracle."""
-    from eoreader_spark.operators import multimodal
-
-    media = _gen_h264_i4_media(spark)
-    feats = multimodal.video_frame_sample(media, every_n=2, resize=4)
-    block_px = (F.col("w") / 4 * (F.col("h") / 4)).cast("double")
-    scaled = F.transform("features", lambda x: x * block_px)
-    return (
-        feats.join(media.select("media_id", "w", "h"), "media_id")
-        .select(
-            "media_id",
-            "frame_idx",
-            F.size("features").cast("long").alias("n_feat"),
-            F.aggregate(scaled, F.lit(0.0), lambda a, x: a + x)
-            .cast("long").alias("feat_sum_px"),
-            F.array_min(scaled).cast("long").alias("feat_min_px"),
-            F.array_max(scaled).cast("long").alias("feat_max_px"),
-        )
-        .orderBy("media_id", "frame_idx")
-    )
-
-
-def _h264_i4_oracle() -> str:
-    """Single-process replay: own encoder (intra4x4) -> own decoder."""
-    from eoreader_spark.sources import avcc as _a
-
-    rows = []
-    for j in range(3):
-        frames = _h264_gop_frames(j)
-        h, w = frames[0].shape
-        decoded = _a.decode_h264(
-            _a.encode_h264(frames, qp=12, gop=3, intra4x4=True))
-        bh, bw = h // 4, w // 4
-        for fi in range(0, len(decoded), 2):
-            luma = decoded[fi].astype(np.float32)
-            feat = luma.reshape(4, bh, 4, bw).mean(axis=(1, 3)).ravel()
-            sc = (feat * (bh * bw)).astype(np.int64)
-            rows.append(
-                f"('i4{j:03d}', {fi}, 16, {int(sc.sum())}, {int(sc.min())}, {int(sc.max())})"
-            )
-    values = ",\n                ".join(rows)
-    return f"""
-            SELECT media_id, cast(frame_idx AS INTEGER) AS frame_idx,
-                   cast(n_feat AS BIGINT) AS n_feat,
-                   cast(feat_sum_px AS BIGINT) AS feat_sum_px,
-                   cast(feat_min_px AS BIGINT) AS feat_min_px,
-                   cast(feat_max_px AS BIGINT) AS feat_max_px
-            FROM (VALUES
-                {values}
-            ) AS t(media_id, frame_idx, n_feat, feat_sum_px, feat_min_px, feat_max_px)
-            ORDER BY media_id, frame_idx
-        """
 
 
 def _h264_parts_frames(j: int):
@@ -4172,51 +3637,74 @@ def _h264_parts_frames(j: int):
     return frames
 
 
-def _gen_h264_parts_media(spark: SparkSession, n_videos: int = 3):
-    """Partitioned-P fixtures (round 8, late): shear-motion GOP streams
-    encoded by the engine's own encoder, whose SAD mode decision splits
-    the boundary macroblocks into 16x8/8x16 partitions — per-partition MV
-    prediction (8.4.1.3 directional cases), the 4x4-granular motion field
-    and the multi-partition MC assembly all sit on the decode path."""
-    from collections.abc import Iterator as _It
+def _annexb(**kw):
+    """(encode, replay) of a raw Annex-B H.264 gate: the engine's own
+    encoder run with `kw` (qp, gop and coding tools); the replay decodes the
+    whole stream single-process.  Fully deterministic end to end, so the
+    replay is an exact oracle."""
 
-    def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+    def encode(j: int, frames) -> tuple[bytes, str]:
         from eoreader_spark.sources import avcc as _a
 
+        return _a.encode_h264(frames, **kw), "h264"
+
+    def replay(frames) -> list:
+        from eoreader_spark.sources import avcc as _a
+
+        return _a.decode_h264(_a.encode_h264(frames, **kw))
+
+    return encode, replay
+
+
+# video gate -> (media_id prefix, n_videos, frames_of(j), encode(j, frames)
+# -> (payload, fmt) run on the workers, replay(frames) -> every decoded luma
+# plane run single-process for the oracle)
+_VIDEO_GATES = {
+    "video_feats": ("vid", 4, _mjpeg_frames, _mjpeg_encode, _mjpeg_replay),
+    "h264_feats": ("avc", 3, _avc1_frames, _avc1_encode, _avc1_replay),
+    # gop=3: frames 0/3 are IDR slices, 1/2/4/5 P slices (P_Skip /
+    # P_L0_16x16, single reference, quarter-pel MC)
+    "h264_gop": ("gop", 3, _h264_gop_frames, *_annexb(qp=8, gop=3)),
+    # coarse qp with the in-loop deblocking filter ENABLED (idc 0 in the
+    # slice headers; the encoder reconstructs its references through the
+    # same clause-8.7 filter the decoder applies)
+    "h264_deblock": ("db", 3, _h264_gop_frames, *_annexb(qp=32, gop=3, deblock=True)),
+    # intra frames coded as all-I_4x4 macroblocks; P frames predict from
+    # the I_4x4 reconstruction
+    "h264_i4": ("i4", 3, _h264_gop_frames, *_annexb(qp=12, gop=3, intra4x4=True)),
+    # the encoder's SAD mode decision splits the shear-boundary macroblocks
+    # into 16x8/8x16 (and P_8x8) partitions
+    "h264_parts": ("pp", 3, _h264_parts_frames, *_annexb(qp=10, gop=3)),
+}
+
+
+def _video_gate(spark: SparkSession, name: str) -> DataFrame:
+    """The video gates' shared media generator and feature query: one
+    multimodal.MEDIA_SCHEMA row per fixture video of `_VIDEO_GATES[name]`,
+    every 2nd frame decoded by video_frame_sample into 4x4 luma box means.
+    Each mean times its block pixel count is an integer (power-of-two
+    blocks), reduced per frame to n_feat and the integer sum/min/max."""
+    from collections.abc import Iterator as _It
+
+    from eoreader_spark.operators import multimodal
+
+    prefix, n_videos, frames_of, encode, _ = _VIDEO_GATES[name]
+    columns = [f.split()[0] for f in multimodal.MEDIA_SCHEMA.split(",")]
+
+    def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
         for pdf in it:
             rows = []
             for j in pdf["id"].astype("int64"):
                 j = int(j)
-                frames = _h264_parts_frames(j)
-                h, w = frames[0].shape
-                payload = _a.encode_h264(frames, qp=10, gop=3)
-                rows.append(
-                    (f"pp{j:03d}", "video", payload, "h264", w, h, 0,
-                     len(frames))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "bytes", "fmt", "w", "h",
-                         "sample_rate", "n_frames"],
-            )
+                frames = frames_of(j)
+                h, w = frames[0].shape[-2:]
+                payload, fmt = encode(j, frames)
+                rows.append((f"{prefix}{j:03d}", "video", payload, fmt, w, h, 0, len(frames)))
+            yield pd.DataFrame(rows, columns=columns)
 
-    return (
-        spark.range(n_videos, numPartitions=n_videos)
-        .mapInPandas(gen, schema=(
-            "media_id string, kind string, bytes binary, fmt string,"
-            " w int, h int, sample_rate int, n_frames int"))
+    media = spark.range(n_videos, numPartitions=n_videos).mapInPandas(
+        gen, schema=multimodal.MEDIA_SCHEMA
     )
-
-
-def q_h264_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-partition P macroblocks on the gate (round 8, late): shear
-    motion forces 16x8/8x16 splits, so a defect in the partition syntax
-    order, the directional MV predictors, the per-partition MC assembly
-    or the block-granular deblock bS shifts pixels and breaks the hash.
-    Same framing as h264_gop; replay oracle."""
-    from eoreader_spark.operators import multimodal
-
-    media = _gen_h264_parts_media(spark)
     feats = multimodal.video_frame_sample(media, every_n=2, resize=4)
     block_px = (F.col("w") / 4 * (F.col("h") / 4)).cast("double")
     scaled = F.transform("features", lambda x: x * block_px)
@@ -4235,22 +3723,22 @@ def q_h264_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _h264_parts_oracle() -> str:
-    """Single-process replay: own encoder (shear fixtures) -> own decoder."""
-    from eoreader_spark.sources import avcc as _a
-
+def _video_oracle(name: str) -> str:
+    """Independent single-process replay of a video gate: encode + demux +
+    decode every fixture of `_VIDEO_GATES[name]`, then the same every-2nd
+    frame 4x4 box-mean stats, stated as literal VALUES."""
+    prefix, n_videos, frames_of, _, replay = _VIDEO_GATES[name]
     rows = []
-    for j in range(3):
-        frames = _h264_parts_frames(j)
-        h, w = frames[0].shape
-        decoded = _a.decode_h264(_a.encode_h264(frames, qp=10, gop=3))
+    for j in range(n_videos):
+        decoded = replay(frames_of(j))
+        h, w = decoded[0].shape
         bh, bw = h // 4, w // 4
         for fi in range(0, len(decoded), 2):
             luma = decoded[fi].astype(np.float32)
             feat = luma.reshape(4, bh, 4, bw).mean(axis=(1, 3)).ravel()
             sc = (feat * (bh * bw)).astype(np.int64)
             rows.append(
-                f"('pp{j:03d}', {fi}, 16, {int(sc.sum())}, {int(sc.min())}, {int(sc.max())})"
+                f"('{prefix}{j:03d}', {fi}, 16, {int(sc.sum())}, {int(sc.min())}, {int(sc.max())})"
             )
     values = ",\n                ".join(rows)
     return f"""
@@ -4264,6 +3752,68 @@ def _h264_parts_oracle() -> str:
             ) AS t(media_id, frame_idx, n_feat, feat_sum_px, feat_min_px, feat_max_px)
             ORDER BY media_id, frame_idx
         """
+
+
+def q_video_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL Motion-JPEG video on the gate: demux the concatenated-JFIF
+    stream (split_mjpeg marker walk), decode every 2nd frame with the
+    engine's own T.81 baseline codec, 4x4 luma box-mean features.  Each
+    feature times its block pixel count is an integer (power-of-two blocks),
+    so distributed decode == independent single-process replay exactly; the
+    oracle states the per-frame integer stats as literals."""
+    return _video_gate(spark, "video_feats")
+
+
+def q_h264_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL intra H.264 video on the gate (round-7 VERDICT #6a): 'avc1'
+    MP4 tracks demuxed via avcC + length-prefixed NALs, every 2nd frame
+    decoded by the engine's own CAVLC/I_16x16 decoder, 4x4 luma box-mean
+    features.  Same integer-exact feature framing as video_feats; the
+    oracle replays encode+decode single-process (the codec is
+    deterministic end to end)."""
+    return _video_gate(spark, "h264_feats")
+
+
+def q_h264_gop(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL inter H.264 on the gate (round-8 VERDICT #1): GOP-structured
+    Annex-B streams (IDR + P slices, single reference, CAVLC, quarter-pel
+    MC per ISO 14496-10 8.4) decoded by the engine's own decoder inside
+    video_frame_sample; every_n=2 with gop=3 samples frames 0 (IDR), 2 (a
+    P frame two predictions deep) and 4 (P after the mid-stream IDR), so a
+    wrong MC interpolation tap, MV predictor or reference hand-off breaks
+    the hash.  Same integer-exact feature framing as h264_feats; the
+    oracle replays encode+decode single-process (the codec is
+    deterministic end to end)."""
+    return _video_gate(spark, "h264_gop")
+
+
+def q_h264_deblock(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """In-loop deblocking on the gate (round 8): GOP streams encoded at a
+    coarse qp with the clause-8.7 filter active, decoded by
+    video_frame_sample through the engine's own decoder.  Any defect in
+    the boundary-strength rules, threshold tables, strong/clipped edge
+    filters, the MB-sequential edge order or the filtered-reference P
+    hand-off shifts decoded pixels and breaks the hash.  Same
+    integer-exact feature framing as h264_gop; replay oracle."""
+    return _video_gate(spark, "h264_deblock")
+
+
+def q_h264_i4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """I_4x4 intra decoding on the gate (round 8, late): GOP streams whose
+    intra frames are all-I_4x4; a defect in any of the nine 8.3.1.2
+    prediction modes, the most-probable-mode derivation, the INTRA CBP
+    table or the z-scan reconstruction order shifts pixels and breaks the
+    hash.  Same framing as h264_gop; replay oracle."""
+    return _video_gate(spark, "h264_i4")
+
+
+def q_h264_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-partition P macroblocks on the gate (round 8, late): shear
+    motion forces 16x8/8x16 splits, so a defect in the partition syntax
+    order, the directional MV predictors, the per-partition MC assembly
+    or the block-granular deblock bS shifts pixels and breaks the hash.
+    Same framing as h264_gop; replay oracle."""
+    return _video_gate(spark, "h264_parts")
 
 
 def q_lineage_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5292,33 +4842,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {k: _wrap(v) for k, v in ordered.items()}
 
 
-
-_WARP_SHIFT_SQL = """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000001', 1, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000004', 4, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000007', 7, 256, 128),
-                ('img000000000009', 9, 64, 128),
-                ('img000000000010', 10, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       CASE WHEN (y % 64) + 5 <= 63 AND (x % 64) + 3 <= 63
+_WARP_SHIFT_SQL = _valid_px_oracle("""CASE WHEN (y % 64) + 5 <= 63 AND (x % 64) + 3 <= 63
                             THEN (seed*7 + (x+3)*13 + (y+5)*17 + ((x+3)*(y+5)) % 29) % 256
-                       END AS v
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
-            SELECT image_id,
-                   count(*) AS n_px,
-                   count(v) AS n_valid,
-                   cast(sum(coalesce(v, 0)) AS BIGINT) AS px_sum
-            FROM px GROUP BY image_id ORDER BY image_id
-        """
+                       END""")
+
 
 def _reader_dispatch_oracle() -> str:
     from eoreader_spark.sources import reader
@@ -5893,11 +5420,11 @@ def oracle_sql() -> dict[str, str]:
         "stencil_custom": _stencil_custom_oracle(),
         "dem_attach": _dem_attach_oracle(),
         "geotiff_read": _geotiff_oracle(),
-        "jfif_decode": _jfif_oracle(),
+        "jfif_decode": _jfif_oracle("jfif"),
         "jp2_overview": _jp2_overview_oracle(),
         "jp2_lossy": _jp2_lossy_oracle(),
         "jp2_tiled": _jp2_tiled_oracle(),
-        "jfif420_decode": _jfif420_oracle(),
+        "jfif420_decode": _jfif_oracle("j420_"),
         "winnow": _winnow_oracle(),
         "dedup_clusters": """
             WITH RECURSIVE e AS (
@@ -5994,35 +5521,12 @@ def oracle_sql() -> dict[str, str]:
         # warp_bilinear: half-pixel shift -> all weights 0.25; 4*out = sum of
         # the 4 sampled integers (exact).  Valid iff the 2x2 sample window
         # stays inside the 64x64 tile: local x <= 60, local y <= 61.
-        "warp_bilinear": """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000001', 1, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000004', 4, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000007', 7, 256, 128),
-                ('img000000000009', 9, 64, 128),
-                ('img000000000010', 10, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       CASE WHEN (x % 64) <= 60 AND (y % 64) <= 61 THEN
+        "warp_bilinear": _valid_px_oracle("""CASE WHEN (x % 64) <= 60 AND (y % 64) <= 61 THEN
                             (seed*7 + (x+2)*13 + (y+1)*17 + ((x+2)*(y+1)) % 29) % 256
                           + (seed*7 + (x+3)*13 + (y+1)*17 + ((x+3)*(y+1)) % 29) % 256
                           + (seed*7 + (x+2)*13 + (y+2)*17 + ((x+2)*(y+2)) % 29) % 256
                           + (seed*7 + (x+3)*13 + (y+2)*17 + ((x+3)*(y+2)) % 29) % 256
-                       END AS v4
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
-            SELECT image_id,
-                   count(*) AS n_px,
-                   count(v4) AS n_valid,
-                   cast(sum(coalesce(v4, 0)) AS BIGINT) AS px4_sum
-            FROM px GROUP BY image_id ORDER BY image_id
-        """,
+                       END""", "v4", "px4_sum"),
         # fingerprint: the md5x15 token hash is shared by both engines; the
         # rolling fold replays with list_reduce (acc*31 < 2^61, hash < 2^60
         # keep every intermediate in BIGINT; all operands nonnegative so
@@ -6161,13 +5665,13 @@ def oracle_sql() -> dict[str, str]:
             FROM px GROUP BY image_id ORDER BY image_id
         """,
         # video_feats: independent single-process MJPEG demux+decode replay
-        "video_feats": _video_feats_oracle(),
+        "video_feats": _video_oracle("video_feats"),
         "jp2_rate": _jp2_rate_oracle(),
-        "h264_feats": _h264_feats_oracle(),
-        "h264_gop": _h264_gop_oracle(),
-        "h264_deblock": _h264_deblock_oracle(),
-        "h264_i4": _h264_i4_oracle(),
-        "h264_parts": _h264_parts_oracle(),
+        "h264_feats": _video_oracle("h264_feats"),
+        "h264_gop": _video_oracle("h264_gop"),
+        "h264_deblock": _video_oracle("h264_deblock"),
+        "h264_i4": _video_oracle("h264_i4"),
+        "h264_parts": _video_oracle("h264_parts"),
         "maxar_members": _maxar_members_oracle(),
         "stac_mpc": _stac_mpc_oracle(),
         # audio_info: integer duration arithmetic restated from the fixture

@@ -25,8 +25,6 @@ SPECTRAL_NAMES = [
 ]
 # SAR polarization bands (band_names.py:387-424); *_DSPK resolved by suffix
 SAR_NAMES = ["VV", "VH", "HH", "HV", "RH", "RV"]
-# S2-L2A quality-assurance bands (band_names.py:839-859)
-L2A_NAMES = ["AOT", "WVP", "SCL"]
 # S3-OLCI channels with no cross-sensor canonical name keep their Oa id as
 # their OWN band name, exactly like the reference (s3_olci_product.py:203-435
 # keys Oa01/Oa09/Oa10/Oa13/Oa14/Oa15/Oa18/Oa19/Oa21 by the Oa enum itself)

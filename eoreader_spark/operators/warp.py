@@ -251,10 +251,6 @@ def geocode_swath(
     return agg.withColumnRenamed("query_id", "grid_id")
 
 
-def _cross(ax, ay, bx, by):
-    return ax * by - ay * bx
-
-
 def _inv_bilinear_udf(eps: float):
     """Vectorized inverse-bilinear solve: given quad corners A..D and the
     target P, return (u, v) with P = A + u*e + v*f + u*v*g.  Pure float64

@@ -237,11 +237,9 @@ def run_scale(spark, workdir: str, n_images: int, n_docs: int) -> dict:
                 rows, columns=["media_id", "kind", "bytes", "fmt", "w",
                                "h", "sample_rate", "n_frames"])
 
-    media_schema = ("media_id string, kind string, bytes binary, fmt string,"
-                    " w int, h int, sample_rate int, n_frames int")
     t0 = time.perf_counter()
     media = spark.range(n_vid, numPartitions=min(64, n_vid)).mapInPandas(
-        _gen_vid, schema=media_schema
+        _gen_vid, schema=multimodal.MEDIA_SCHEMA
     )
     n_frames_out = multimodal.video_frame_sample(media, every_n=2, resize=4).count()
     t["h264_gop_codec"] = time.perf_counter() - t0
