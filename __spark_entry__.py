@@ -752,6 +752,92 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _arr_sum(col: str | F.Column) -> F.Column:
+    """Integer sum of an array column, each element cast to long."""
+    return F.aggregate(col, F.lit(0).cast("long"), lambda a, x: a + x.cast("long"))
+
+
+# (image_id, seed, h, w) of the raw8 images among the first 12 datagen
+# images, dims from datagen.image_dims: 3-plane LEGACY3 images are raw8 at
+# ids % 3 == 0, the multi-plane layouts alternate raw8/jpeg (even ids).  The
+# oracles' twins of `_gate_engine`'s images.
+_RAW8_IMGS_SQL = """(VALUES
+                ('img000000000000', 0, 64, 64),
+                ('img000000000003', 3, 128, 64),
+                ('img000000000006', 6, 256, 64),
+                ('img000000000009', 9, 64, 128))"""
+_RAW8_MS_IMGS_SQL = """(VALUES
+                ('img000000000000', 0, 64, 64),
+                ('img000000000002', 2, 64, 64),
+                ('img000000000004', 4, 128, 64),
+                ('img000000000006', 6, 256, 64),
+                ('img000000000008', 8, 256, 128),
+                ('img000000000010', 10, 64, 128))"""
+
+
+def _px_sql(imgs_sql: str, cols: str, y_max: int = 255, x_max: int = 255) -> str:
+    """Oracle head `WITH imgs(image_id, seed, h, w) AS <imgs_sql>, px AS
+    (...)`: one px row per pixel (y, x) of each image, carrying image_id and
+    `cols` (SQL over seed, y and x).  Every image fits in y_max+1 rows and
+    x_max+1 columns."""
+    return f"""
+            WITH imgs(image_id, seed, h, w) AS {imgs_sql},
+            px AS (
+                SELECT image_id,
+                       {cols}
+                FROM imgs,
+                     generate_series(0, {y_max}) AS gy(y),
+                     generate_series(0, {x_max}) AS gx(x)
+                WHERE y < h AND x < w
+            )"""
+
+
+def _gate_engine(
+    spark: SparkSession,
+    band_map: str | None = None,
+    qa: str | None = None,
+    fmt: str = "raw8",
+    **engine_kw,
+):
+    """The ImageEngine load gates' shared engine: the raw8 images among the
+    first 12 datagen images of band_map's layout (`_RAW8_IMGS_SQL` for the
+    default 3-plane layout, `_RAW8_MS_IMGS_SQL` for the multi-plane ones),
+    re-encoded into container `fmt`, with the datagen qa table named by `qa`
+    ('image': gen_qa_masks, 'band': gen_band_qa_masks) joined to their ids."""
+    from eoreader_spark import bands as bands_mod
+    from eoreader_spark import datagen
+    from eoreader_spark.plans import loader
+
+    # a constellation tag loads its layout class, like ImageEngine's own
+    layout = bands_mod.CONSTELLATION_LAYOUT.get(band_map, band_map) or "LEGACY3"
+    images = datagen.gen_images(spark, 12, layout=layout).filter(F.col("fmt") == "raw8")
+    if qa:
+        gen_qa = {"image": datagen.gen_qa_masks, "band": datagen.gen_band_qa_masks}[qa]
+        engine_kw["qa_masks"] = gen_qa(spark, 12).join(
+            F.broadcast(images.select("image_id")), "image_id"
+        )
+    if fmt != "raw8":
+        images = datagen.transcode_images(images, fmt)
+    return loader.ImageEngine(images, band_map=band_map, **engine_kw)
+
+
+def _ssum_stats(wide: DataFrame, aliases: dict[str, str]) -> DataFrame:
+    """Per image: n_px, the pixel count of the first band, and for each
+    band the integer sum of floor(px * 10^4) as aliases[band]."""
+    first = next(iter(aliases))
+    return (
+        wide.groupBy("image_id")
+        .agg(
+            F.sum(F.size(f"px_{first}")).cast("long").alias("n_px"),
+            *[
+                F.sum(_arr_sum(F.transform(f"px_{b}", lambda x: F.floor(x * 10000)))).alias(a)
+                for b, a in aliases.items()
+            ],
+        )
+        .orderBy("image_id")
+    )
+
+
 def q_raster_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship raster path, VALUE-EXACT since round 2: synthesize 12
     deterministic images (raw8/png lossless; the fake-lossy codec's
@@ -789,17 +875,12 @@ def q_nbr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-scaled integer stats.  The DuckDB oracle regenerates the closed-form
     pixel function with generate_series — every compared column is BIGINT, so
     no float-sum ordering hazard."""
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
-
-    images = datagen.gen_images(spark, 12, layout="S2_L2A").filter(F.col("fmt") == "raw8")
-    eng = loader.ImageEngine(images, band_map="S2_L2A")
-    wide = eng.load(["NBR"], clean="raw")
+    wide = _gate_engine(spark, "S2_L2A").load(["NBR"], clean="raw")
     scaled = F.transform("px_NBR", lambda x: F.floor(x * 10000).cast("long"))
     return (
         wide.select(
             "image_id",
-            F.aggregate(scaled, F.lit(0).cast("long"), lambda a, x: a + x).alias("s"),
+            _arr_sum(scaled).alias("s"),
             F.array_min(scaled).alias("mn"),
             F.array_max(scaled).alias("mx"),
             F.size("px_NBR").cast("long").alias("n"),
@@ -819,15 +900,8 @@ def q_scl_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCL scene-classification analog, VALUE-EXACT: the derived S2-L2A SCL
     band (public class codes 0/1/3/4/9 from the QA bitfield) counted per
     image; oracle recomputes the QA closed form in SQL."""
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
+    wide = _gate_engine(spark, "S2_L2A", qa="image").load(["SCL"], clean="raw")
 
-    images = datagen.gen_images(spark, 12, layout="S2_L2A").filter(F.col("fmt") == "raw8")
-    qa = datagen.gen_qa_masks(spark, 12).join(
-        F.broadcast(images.select("image_id")), "image_id"
-    )
-    eng = loader.ImageEngine(images, qa_masks=qa, band_map="S2_L2A")
-    wide = eng.load(["SCL"], clean="raw")
     def eq(c):  # NB: a `lambda x, c=c` would be read by Spark as an
         return lambda x: x == F.lit(c)  # (element, index) 2-arg lambda
 
@@ -960,11 +1034,7 @@ def _valid_px_stats(warped: DataFrame, scale: int = 1, alias: str = "px_sum") ->
         "image_id",
         F.size("px").cast("long").alias("n"),
         F.size(valid).alias("nv"),
-        F.aggregate(
-            F.transform(valid, lambda x: (x * scale).cast("long")),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        ).alias("s"),
+        _arr_sum(F.transform(valid, lambda x: x * scale)).alias("s"),
     )
     return (
         per_tile.groupBy("image_id")
@@ -981,16 +1051,7 @@ def _valid_px_oracle(case_sql: str, v: str = "v", alias: str = "px_sum") -> str:
     """DuckDB twin of `_valid_px_stats` over `_LOSSLESS_IMGS_SQL`: case_sql
     states output pixel (y, x), scaled like the Spark side, and is NULL where
     the warp leaves NaN."""
-    return f"""
-            WITH imgs(image_id, seed, h, w) AS {_LOSSLESS_IMGS_SQL},
-            px AS (
-                SELECT image_id,
-                       {case_sql} AS {v}
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
+    return _px_sql(_LOSSLESS_IMGS_SQL, f"{case_sql} AS {v}") + f"""
             SELECT image_id,
                    count(*) AS n_px,
                    count({v}) AS n_valid,
@@ -1414,7 +1475,7 @@ def _stencil_gate(spark: SparkSession, spec, out: DataFrame, rounded: bool) -> D
     ints = F.expr("transform(iv, v -> cast(v as bigint))")
     per_tile = j.select(
         "image_id", F.size("iv").cast("long").alias("n"),
-        F.aggregate(ints, F.lit(0).cast("long"), lambda a, x: a + x).alias("s"),
+        _arr_sum(ints).alias("s"),
         F.array_min(ints).alias("mn"), F.array_max(ints).alias("mx"),
     )
     return (
@@ -1629,29 +1690,16 @@ def q_slstr_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     HDF5/netCDF container (fmt='nc' — SLSTR's actual band format is also
     netCDF4, ref s3_slstr_product.py via s3_product.py:788-886); lossless,
     so the oracle is unchanged."""
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
-
-    images = datagen.transcode_images(
-        datagen.gen_images(spark, 12, layout="S3_SLSTR").filter(
-            F.col("fmt") == "raw8"
-        ),
-        "nc",
-    )
     outs = []
     for view in ("n", "o"):
-        eng = loader.ImageEngine(
-            images, band_map="S3_SLSTR", view=view, rad_adjust="S3_PN_SLSTR_L1_08"
+        eng = _gate_engine(
+            spark, "S3_SLSTR", fmt="nc", view=view, rad_adjust="S3_PN_SLSTR_L1_08"
         )
         wide = eng.load(_SLSTR_BANDS, clean="raw")
         aggs = [F.sum(F.size(f"px_{_SLSTR_BANDS[0]}")).cast("long").alias("n_px")]
         for b in _SLSTR_BANDS:
-            scaled = F.transform(f"px_{b}", lambda x: F.floor(x * 1e7).cast("long"))
-            aggs.append(
-                F.sum(
-                    F.aggregate(scaled, F.lit(0).cast("long"), lambda a, x: a + x)
-                ).alias(f"sum_{b}")
-            )
+            scaled = F.transform(f"px_{b}", lambda x: F.floor(x * 1e7))
+            aggs.append(F.sum(_arr_sum(scaled)).alias(f"sum_{b}"))
         outs.append(
             wide.groupBy("image_id").agg(*aggs).withColumn("view", F.lit(view))
         )
@@ -1687,13 +1735,7 @@ def _slstr_view_oracle() -> str:
             GROUP BY image_id""")
         union = "\n            UNION ALL\n".join(selects)
     return f"""
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000002', 2, 64, 64),
-                ('img000000000004', 4, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000008', 8, 256, 128),
-                ('img000000000010', 10, 64, 128))
+            WITH imgs(image_id, seed, h, w) AS {_RAW8_MS_IMGS_SQL}
             {union}
             ORDER BY image_id, view
         """
@@ -1705,53 +1747,23 @@ def q_sensor_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivations over the qa bitfield) and reduces them to per-image integer
     counts; the oracle replays the qa closed form.  Mirrors the reference's
     per-sensor mask enumeration (band_names.py:569-835)."""
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
-
-    images = datagen.gen_images(spark, 12, layout="S2_L2A").filter(F.col("fmt") == "raw8")
-    qa = datagen.gen_qa_masks(spark, 12).join(
-        F.broadcast(images.select("image_id")), "image_id"
-    )
-    eng = loader.ImageEngine(images, qa_masks=qa, band_map="S2_L2A")
-    masks = ["MSK_CLASSI_OPAQUE", "SNWPRB", "MSK_QUALIT_QT_NODATA_PIXELS", "TECQUA", "DETFOO"]
-    wide = eng.load(masks, clean="raw")
-
-    def arr_sum(col):
-        return F.sum(
-            F.aggregate(col, F.lit(0).cast("long"), lambda a, x: a + x.cast("long"))
-        )
-
+    masks = {
+        "MSK_CLASSI_OPAQUE": "n_opaque", "SNWPRB": "snwprb_sum",
+        "MSK_QUALIT_QT_NODATA_PIXELS": "n_nodata", "TECQUA": "n_tecqua", "DETFOO": "n_detfoo",
+    }
+    wide = _gate_engine(spark, "S2_L2A", qa="image").load(list(masks), clean="raw")
     return (
         wide.groupBy("image_id")
         .agg(
-            F.sum(F.size(f"px_{masks[0]}")).cast("long").alias("n_px"),
-            arr_sum(f"px_{masks[0]}").alias("n_opaque"),
-            arr_sum(f"px_{masks[1]}").alias("snwprb_sum"),
-            arr_sum(f"px_{masks[2]}").alias("n_nodata"),
-            arr_sum(f"px_{masks[3]}").alias("n_tecqua"),
-            arr_sum(f"px_{masks[4]}").alias("n_detfoo"),
+            F.sum(F.size("px_MSK_CLASSI_OPAQUE")).cast("long").alias("n_px"),
+            *[F.sum(_arr_sum(f"px_{m}")).alias(a) for m, a in masks.items()],
         )
         .orderBy("image_id")
     )
 
 
 def _sensor_masks_oracle() -> str:
-    return """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000002', 2, 64, 64),
-                ('img000000000004', 4, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000008', 8, 256, 128),
-                ('img000000000010', 10, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       (seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS p0
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
+    return _px_sql(_RAW8_MS_IMGS_SQL, "(seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS p0") + """
             SELECT image_id,
                    count(*) AS n_px,
                    cast(sum(CASE WHEN p0 > 200 THEN 1 ELSE 0 END) AS BIGINT) AS n_opaque,
@@ -1882,28 +1894,13 @@ def q_per_band_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely differ — associating the wrong mask with a band breaks the
     hash (mirrors the DETFOO_B03-style expansion,
     /root/reference/eoreader/products/optical/s2_product.py:802-925)."""
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
-
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") == "raw8")
-    band_qa = datagen.gen_band_qa_masks(spark, 12).join(
-        F.broadcast(images.select("image_id")), "image_id"
-    )
-    eng = loader.ImageEngine(images, qa_masks=band_qa)
+    eng = _gate_engine(spark, qa="band")
     wide = eng.load(["RED", "GREEN", "NIR"], clean="clean", reflectance=False)
     aggs = []
     for b in ("RED", "GREEN", "NIR"):
         valid = F.filter(f"px_{b}", lambda x: x.isNotNull() & ~F.isnan(x))
         aggs.append(F.sum(F.size(valid)).cast("long").alias(f"n_valid_{b}"))
-        aggs.append(
-            F.sum(
-                F.aggregate(
-                    F.transform(valid, lambda x: x.cast("long")),
-                    F.lit(0).cast("long"),
-                    lambda a, x: a + x,
-                )
-            ).alias(f"dn_sum_{b}")
-        )
+        aggs.append(F.sum(_arr_sum(valid)).alias(f"dn_sum_{b}"))
     return wide.groupBy("image_id").agg(*aggs).orderBy("image_id")
 
 
@@ -1961,11 +1958,7 @@ def _per_band_mask_oracle() -> str:
         cols.append(f"cast(sum(CASE WHEN {ok} THEN ({v}) ELSE 0 END) AS BIGINT) AS dn_sum_{b}")
     cols_sql = ",\n                   ".join(cols)
     return f"""
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000009', 9, 64, 128))
+            WITH imgs(image_id, seed, h, w) AS {_RAW8_IMGS_SQL}
             SELECT image_id,
                    {cols_sql}
             FROM imgs,
@@ -2053,11 +2046,7 @@ def q_sar_noise_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             "image_id",
             F.size("px").cast("long").alias("n_t"),
             F.size(valid).cast("long").alias("nv_t"),
-            F.aggregate(
-                F.transform(valid, lambda v: F.round(v.cast("double") * 128).cast("long")),
-                F.lit(0).cast("long"),
-                lambda a, x: a + x,
-            ).alias("s_t"),
+            _arr_sum(F.transform(valid, lambda v: F.round(v.cast("double") * 128))).alias("s_t"),
         )
         .groupBy("image_id")
         .agg(
@@ -2125,29 +2114,25 @@ def q_radiometric_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = t.withColumn("toa", radiometry.toa_rad_to_refl("L", 1.0, 1500.0, 30.0))
     bt_scaled = F.expr("transform(bt, v -> cast(round(v * 10000) as bigint))")
     toa_scaled = F.expr("transform(toa, v -> cast(floor(v * 1e7) as bigint))")
-    agg = lambda c: F.sum(F.aggregate(c, F.lit(0).cast("long"), lambda a, x: a + x))  # noqa: E731
     return (
         t.select(
             "image_id", F.size("px").cast("long").alias("n"),
             bt_scaled.alias("bts"), toa_scaled.alias("toas"),
         )
         .groupBy("image_id")
-        .agg(F.sum("n").alias("n_px"), agg("bts").alias("bt_sum"), agg("toas").alias("toa_sum"))
+        .agg(
+            F.sum("n").alias("n_px"),
+            F.sum(_arr_sum("bts")).alias("bt_sum"),
+            F.sum(_arr_sum("toas")).alias("toa_sum"),
+        )
         .orderBy("image_id")
     )
 
 
 def _radiometric_oracle() -> str:
-    return f"""
-            WITH imgs(image_id, seed, h, w) AS {_LOSSLESS_IMGS_SQL},
-            px AS (
-                SELECT image_id,
-                       ((seed*7 + x*13 + y*17 + (x*y) % 29) % 256) * 0.125 + 0.125 AS L
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
+    return _px_sql(
+        _LOSSLESS_IMGS_SQL, "((seed*7 + x*13 + y*17 + (x*y) % 29) % 256) * 0.125 + 0.125 AS L"
+    ) + f"""
             SELECT image_id, count(*) AS n_px,
                    cast(sum(round({_BT_K2} / ln({_BT_K1} / L + 1.0) * 10000)) AS BIGINT) AS bt_sum,
                    cast(sum(floor(L * {_TOA_COEF!r} * 1e7)) AS BIGINT) AS toa_sum
@@ -2166,12 +2151,8 @@ def q_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "px", F.expr("transform(px, v -> cast(7.0 as float))")
     )
     m = warp.mosaic([overlay, tiles])
-    s = F.aggregate(
-        F.expr("transform(px, v -> cast(v as bigint))"),
-        F.lit(0).cast("long"), lambda a, x: a + x,
-    )
     return (
-        m.select("image_id", F.size("px").cast("long").alias("n"), s.alias("s"))
+        m.select("image_id", F.size("px").cast("long").alias("n"), _arr_sum("px").alias("s"))
         .groupBy("image_id")
         .agg(
             F.count(F.lit(1)).alias("n_tiles"),
@@ -2257,23 +2238,19 @@ def q_custom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes every output an exact integer: round(v*4080) = 2*dn_nir - 2*dn_red
     - 255 regardless of float32 rounding inside the kernel (error bound
     ~1e-3 << 0.5)."""
-    from eoreader_spark import datagen
     from eoreader_spark.functions import indices
-    from eoreader_spark.plans import loader
 
     def make_xdiff(alpha: float):
         return lambda b: (alpha * b["NIR"] - b["RED"]) * 0.25
 
     indices.register_index("XDIFF_GATE", ["NIR", "RED"], make_xdiff(0.5))
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") == "raw8")
-    eng = loader.ImageEngine(images, gains={"RED": (0.5, 0.25)})
-    wide = eng.load(["XDIFF_GATE"], clean="raw")
+    wide = _gate_engine(spark, gains={"RED": (0.5, 0.25)}).load(["XDIFF_GATE"], clean="raw")
     scaled = F.expr("transform(px_XDIFF_GATE, v -> cast(round(cast(v as double) * 4080) as bigint))")
     return (
         wide.select(
             "image_id",
             F.size("px_XDIFF_GATE").cast("long").alias("n"),
-            F.aggregate(scaled, F.lit(0).cast("long"), lambda a, x: a + x).alias("s"),
+            _arr_sum(scaled).alias("s"),
             F.array_min(scaled).alias("mn"),
             F.array_max(scaled).alias("mx"),
         )
@@ -2288,22 +2265,9 @@ def q_custom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _custom_index_oracle() -> str:
     # round(v*4080) = 2*dn_nir - 2*dn_red - 255 (see q_custom_index)
-    return """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000009', 9, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       2 * ((seed*7 + 62 + x*13 + y*17 + (x*y) % 29) % 256)
+    return _px_sql(_RAW8_IMGS_SQL, """2 * ((seed*7 + 62 + x*13 + y*17 + (x*y) % 29) % 256)
                        - 2 * ((seed*7 + x*13 + y*17 + (x*y) % 29) % 256)
-                       - 255 AS v
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
+                       - 255 AS v""") + """
             SELECT image_id, count(*) AS n_px,
                    cast(sum(v) AS BIGINT) AS xdiff_sum,
                    min(v) AS xdiff_min, max(v) AS xdiff_max
@@ -2455,25 +2419,14 @@ def q_stack_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dn*2000/51 never lands on .5, so HALF_UP == half-away)."""
     import tempfile
 
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
-
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") == "raw8")
-    qa = datagen.gen_qa_masks(spark, 12).join(
-        F.broadcast(images.select("image_id")), "image_id"
-    )
-    eng = loader.ImageEngine(images, qa_masks=qa)
+    eng = _gate_engine(spark, qa="image")
     out_path = tempfile.mkdtemp(prefix="stack_sink_") + "/stack.parquet"
     stacked = eng.stack(["RED", "NIR"], out_path=out_path, as_uint16=True, clean="clean")
     aggs = [F.count(F.lit(1)).alias("n_tiles")]
     for b in ("RED", "NIR"):
         col = f"px_{b}"
         nodata = F.size(F.filter(col, lambda x: x == 65535))
-        s = F.aggregate(
-            F.filter(col, lambda x: x != 65535),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x.cast("long"),
-        )
+        s = _arr_sum(F.filter(col, lambda x: x != 65535))
         aggs.append(F.sum(nodata).cast("long").alias(f"n_nodata_{b}"))
         aggs.append(F.sum(s).alias(f"u16_sum_{b}"))
     return stacked.groupBy("image_id").agg(*aggs).orderBy("image_id")
@@ -2493,11 +2446,7 @@ def _stack_sink_oracle() -> str:
         )
     cols_sql = ",\n                   ".join(cols)
     return f"""
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000009', 9, 64, 128)),
+            WITH imgs(image_id, seed, h, w) AS {_RAW8_IMGS_SQL},
             px AS (
                 SELECT image_id, w, h,
                        (seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS p0, seed, x, y
@@ -2558,11 +2507,7 @@ def _quicklook_oracle() -> str:
         for p in (0, 1, 2)
     )
     return f"""
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000009', 9, 64, 128)),
+            WITH imgs(image_id, seed, h, w) AS {_RAW8_IMGS_SQL},
             blocks AS (
                 SELECT image_id, w // 4 AS tw, h // 4 AS th,
                        {plane_cols}
@@ -2580,15 +2525,12 @@ def _quicklook_oracle() -> str:
         """
 
 
-def q_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S13 multi-resolution overview pyramid (COG-overview analog) on the
-    gate: one decode emits the /2 and /4 box-mean overviews (the GDAL
-    cascade — float means compose exactly for power-of-two blocks, so the
-    /4 level equals a direct 16-pixel mean); the oracle replays the block
-    sums and numpy's half-even rounding in SQL (the quicklook recipe)."""
+def _encoded_images(spark: SparkSession, prefix: str, encode) -> DataFrame:
+    """The encoded-image gates' shared fixtures: 3-plane make_image(j) for
+    j < 6 (64x64 at even j, 128x64 at odd j), each encoded on the workers by
+    encode(img, j) -> (bytes, fmt), as an images table with image_id
+    f"{prefix}{j:03d}".  `_encoded_imgs_sql(prefix)` lists the same rows."""
     from collections.abc import Iterator as _It
-
-    from eoreader_spark.operators import raster
 
     def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
         from eoreader_spark import codecs as _c
@@ -2598,13 +2540,57 @@ def q_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in pdf["id"].astype("int64"):
                 j = int(j)
                 h, w = (64, 64) if j % 2 == 0 else (128, 64)
-                img = _c.make_image(j, h, w, planes=3)
-                rows.append((f"pyr{j:03d}", _c.encode(img, "raw8"), w, h, "raw8"))
+                data, fmt = encode(_c.make_image(j, h, w, planes=3), j)
+                rows.append((f"{prefix}{j:03d}", data, w, h, fmt))
             yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
 
-    images = spark.range(6, numPartitions=2).mapInPandas(
+    return spark.range(6, numPartitions=2).mapInPandas(
         gen, schema="image_id string, bytes binary, w int, h int, fmt string"
     )
+
+
+def _encoded_imgs_sql(prefix: str) -> str:
+    """(image_id, seed, h, w) VALUES of `_encoded_images(spark, prefix, _)`."""
+    rows = [f"('{prefix}{j:03d}', {j}, {128 if j % 2 else 64}, 64)" for j in range(6)]
+    pairs = ",\n                ".join(f"{a}, {b}" for a, b in zip(rows[::2], rows[1::2]))
+    return f"(VALUES\n                {pairs})"
+
+
+def _green_px_sum(spark: SparkSession, prefix: str, encode) -> DataFrame:
+    """geotiff_read / jp2_decode: plane 1 (GREEN) of `_encoded_images`
+    decoded through the STANDARD tile path; per image the pixel count and
+    the integer pixel sum."""
+    from eoreader_spark.operators import raster
+
+    tiles = raster.tiles_from_images(_encoded_images(spark, prefix, encode), plane=1)
+    return (
+        tiles.select("image_id", F.size("px").cast("long").alias("n"), _arr_sum("px").alias("s"))
+        .groupBy("image_id")
+        .agg(F.sum("n").alias("n_px"), F.sum("s").alias("px_sum"))
+        .orderBy("image_id")
+    )
+
+
+def _green_px_sum_oracle(prefix: str, v: str) -> str:
+    """DuckDB twin of `_green_px_sum`: v states plane 1 at (y, x)."""
+    return _px_sql(_encoded_imgs_sql(prefix), f"{v} AS v", 127, 63) + """
+            SELECT image_id, count(*) AS n_px, cast(sum(v) AS BIGINT) AS px_sum
+            FROM px GROUP BY image_id ORDER BY image_id
+        """
+
+
+def q_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S13 multi-resolution overview pyramid (COG-overview analog) on the
+    gate: one decode emits the /2 and /4 box-mean overviews (the GDAL
+    cascade — float means compose exactly for power-of-two blocks, so the
+    /4 level equals a direct 16-pixel mean); the oracle replays the block
+    sums and numpy's half-even rounding in SQL (the quicklook recipe)."""
+    from collections.abc import Iterator as _It
+
+    from eoreader_spark import codecs
+    from eoreader_spark.operators import raster
+
+    images = _encoded_images(spark, "pyr", lambda img, j: (codecs.encode(img, "raw8"), "raw8"))
     pyr = raster.pyramid(images, levels=(2, 4), fmt="raw8")
 
     def stats(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
@@ -2649,10 +2635,7 @@ def _pyramid_oracle() -> str:
         """
 
     return f"""
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('pyr000', 0, 64, 64), ('pyr001', 1, 128, 64),
-                ('pyr002', 2, 64, 64), ('pyr003', 3, 128, 64),
-                ('pyr004', 4, 64, 64), ('pyr005', 5, 128, 64)),
+            WITH imgs(image_id, seed, h, w) AS {_encoded_imgs_sql("pyr")},
             px AS (
                 SELECT image_id, h, w, p, y, x,
                        (seed*7 + p*31 + x*13 + y*17 + (x*y) % 29) % 256 AS v
@@ -2695,21 +2678,8 @@ def q_collocate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _collocate_oracle() -> str:
-    return """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000009', 9, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       (seed*7 + 62 + x*13 + y*17 + (x*y) % 29) % 256
-                       - (seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS d
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
+    return _px_sql(_RAW8_IMGS_SQL, """(seed*7 + 62 + x*13 + y*17 + (x*y) % 29) % 256
+                       - (seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS d""") + """
             SELECT image_id, count(*) AS n_px, cast(sum(d) AS BIGINT) AS nd_sum
             FROM px GROUP BY image_id ORDER BY image_id
         """
@@ -2764,17 +2734,11 @@ def _stencil_custom_oracle() -> str:
 
 def q_dem_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5 exogenous layers on the hard gate, VALUE-EXACT: a user DEM table
-    attaches through ImageEngine(dem=) and loads as its own band next to a
-    decoded plane (J3 tile-key join); integer sums replay in SQL."""
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
-
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") == "raw8")
-    dem = spark.createDataFrame(
-        [("img000000000000", 64, 64), ("img000000000003", 128, 64),
-         ("img000000000006", 256, 64), ("img000000000009", 64, 128)],
-        "image_id string, h int, w int",
-    ).selectExpr(
+    (one tile grid per image, from the images' own h/w) attaches as the
+    engine's `dem` and loads as its own band next to a decoded plane (J3
+    tile-key join); integer sums replay in SQL."""
+    eng = _gate_engine(spark)
+    eng.dem = eng.images.selectExpr(
         "image_id",
         "explode(flatten(transform(sequence(0, h div 64 - 1), ty ->"
         " transform(sequence(0, w div 64 - 1), tx -> struct(tx as tx, ty as ty))))) as t",
@@ -2784,41 +2748,21 @@ def q_dem_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
         " (3 * (t.tx * 64 + (k % 64)) + 5 * (t.ty * 64 + (k div 64))) % 101"
         " as float)) as z",
     )
-    eng = loader.ImageEngine(images, dem=dem)
     wide = eng.load(["RED", "DEM"], clean="raw", reflectance=False)
-    agg = lambda c: F.sum(  # noqa: E731
-        F.aggregate(
-            F.expr(f"transform({c}, v -> cast(v as bigint))"),
-            F.lit(0).cast("long"), lambda a, x: a + x,
-        )
-    )
     return (
         wide.groupBy("image_id")
         .agg(
             F.sum(F.size("px_RED")).cast("long").alias("n_px"),
-            agg("px_RED").alias("red_sum"),
-            agg("px_DEM").alias("dem_sum"),
+            F.sum(_arr_sum("px_RED")).alias("red_sum"),
+            F.sum(_arr_sum("px_DEM")).alias("dem_sum"),
         )
         .orderBy("image_id")
     )
 
 
 def _dem_attach_oracle() -> str:
-    return """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000009', 9, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       (seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS red,
-                       (3 * x + 5 * y) % 101 AS z
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
+    return _px_sql(_RAW8_IMGS_SQL, """(seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS red,
+                       (3 * x + 5 * y) % 101 AS z""") + """
             SELECT image_id, count(*) AS n_px,
                    cast(sum(red) AS BIGINT) AS red_sum,
                    cast(sum(z) AS BIGINT) AS dem_sum
@@ -2834,61 +2778,13 @@ def q_geotiff_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's write configuration, utils.py:264-299) and ADOBE_DEFLATE —
     all decode through the STANDARD tile path (fmt='tiff', compression
     dispatched from the IFD); integer pixel sums replay the closed form."""
-    from collections.abc import Iterator as _It
+    def encode(img, j):
+        from eoreader_spark.sources import geotiff
 
-    from eoreader_spark import codecs
-    from eoreader_spark.operators import raster
+        comp, pred = [("none", False), ("lzw", True), ("deflate", True)][j % 3]
+        return geotiff.encode_geotiff(img, compression=comp, predictor=pred), "tiff"
 
-    def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        from eoreader_spark import codecs as _c
-        from eoreader_spark.sources import geotiff as _gt
-
-        comps = [("none", False), ("lzw", True), ("deflate", True)]
-        for pdf in it:
-            rows = []
-            for j in pdf["id"].astype("int64"):
-                j = int(j)
-                h, w = (64, 64) if j % 2 == 0 else (128, 64)
-                img = _c.make_image(j, h, w, planes=3)
-                comp, pred = comps[j % 3]
-                b = _gt.encode_geotiff(img, compression=comp, predictor=pred)
-                rows.append((f"tif{j:03d}", b, w, h, "tiff"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
-
-    images = spark.range(6, numPartitions=2).mapInPandas(
-        gen, schema="image_id string, bytes binary, w int, h int, fmt string"
-    )
-    tiles = raster.tiles_from_images(images, plane=1)  # GREEN plane via TIFF
-    s = F.aggregate(
-        F.expr("transform(px, v -> cast(v as bigint))"),
-        F.lit(0).cast("long"), lambda a, x: a + x,
-    )
-    return (
-        tiles.select("image_id", F.size("px").cast("long").alias("n"), s.alias("s"))
-        .groupBy("image_id")
-        .agg(F.sum("n").alias("n_px"), F.sum("s").alias("px_sum"))
-        .orderBy("image_id")
-    )
-
-
-def _geotiff_oracle() -> str:
-    # plane 1 of make_image: (seed*7 + 31 + x*13 + y*17 + (x*y)%29) % 256
-    return """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('tif000', 0, 64, 64), ('tif001', 1, 128, 64),
-                ('tif002', 2, 64, 64), ('tif003', 3, 128, 64),
-                ('tif004', 4, 64, 64), ('tif005', 5, 128, 64)),
-            px AS (
-                SELECT image_id,
-                       (seed*7 + 31 + x*13 + y*17 + (x*y) % 29) % 256 AS v
-                FROM imgs,
-                     generate_series(0, 127) AS gy(y),
-                     generate_series(0, 63) AS gx(x)
-                WHERE y < h AND x < w
-            )
-            SELECT image_id, count(*) AS n_px, cast(sum(v) AS BIGINT) AS px_sum
-            FROM px GROUP BY image_id ORDER BY image_id
-        """
+    return _green_px_sum(spark, "tif", encode)
 
 
 def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3011,14 +2907,10 @@ def _jfif_gate(spark: SparkSession, prefix: str, wire=lambda j: {}) -> DataFrame
         d = v.cast("long") - orig
         return d * d
 
-    add = lambda a, x: a + x  # noqa: E731
-    zero = F.lit(0).cast("long")
-    vsum = F.aggregate(F.expr("transform(px, v -> cast(v as bigint))"), zero, add)
-    esum = F.aggregate(F.transform("px", sqerr_el), zero, add)
     return (
         tiles.select(
             "image_id", F.size("px").cast("long").alias("n"),
-            vsum.alias("s"), esum.alias("e"),
+            _arr_sum("px").alias("s"), _arr_sum(F.transform("px", sqerr_el)).alias("e"),
         )
         .groupBy("image_id")
         .agg(F.sum("n").alias("n_px"), F.sum("s").alias("px_sum"), F.sum("e").alias("sqerr_sum"))
@@ -3399,14 +3291,7 @@ def q_clean_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     loaded at clean='raw' / 'nodata' / 'clean' yields strictly decreasing
     valid counts (raw >= nodata >= clean) with closed-form values — the
     reference's RAW/NODATA/CLEAN ladder (optical_product.py:48-67)."""
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
-
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") == "raw8")
-    qa = datagen.gen_qa_masks(spark, 12).join(
-        F.broadcast(images.select("image_id")), "image_id"
-    )
-    eng = loader.ImageEngine(images, qa_masks=qa)
+    eng = _gate_engine(spark, qa="image")
     outs = []
     for level in ("raw", "nodata", "clean"):
         wide = eng.load(["RED"], clean=level, reflectance=False)
@@ -3414,12 +3299,7 @@ def q_clean_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         outs.append(
             wide.groupBy("image_id").agg(
                 F.sum(F.size(valid)).cast("long").alias(f"n_valid_{level}"),
-                F.sum(
-                    F.aggregate(
-                        F.transform(valid, lambda x: x.cast("long")),
-                        F.lit(0).cast("long"), lambda a, x: a + x,
-                    )
-                ).alias(f"dn_sum_{level}"),
+                F.sum(_arr_sum(valid)).alias(f"dn_sum_{level}"),
             )
         )
     out = outs[0]
@@ -3442,20 +3322,7 @@ def _clean_levels_oracle() -> str:
             f"cast(sum(CASE WHEN {bad} THEN 0 ELSE p0 END) AS BIGINT) AS dn_sum_{level}"
         )
     cols_sql = ",\n                   ".join(cols)
-    return f"""
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000009', 9, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       (seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS p0
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
+    return _px_sql(_RAW8_IMGS_SQL, "(seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS p0") + f"""
             SELECT image_id,
                    {cols_sql}
             FROM px GROUP BY image_id ORDER BY image_id
@@ -3981,7 +3848,7 @@ def q_s2_product_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         wide.select(
             "image_id",
             F.lit(tags[0]).alias("constellation"),
-            F.aggregate(scaled, F.lit(0).cast("long"), lambda a, x: a + x).alias("s"),
+            _arr_sum(scaled).alias("s"),
             F.size("px_NDVI").cast("long").alias("n"),
         )
         .groupBy("image_id", "constellation")
@@ -3997,36 +3864,9 @@ def q_jp2_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     are *.jp2, s2_product.py:592) decoded through the STANDARD tile path
     (fmt='jp2').  Lossless => integer pixel sums replay the closed form
     exactly, like geotiff_read."""
-    from collections.abc import Iterator as _It
+    from eoreader_spark import codecs
 
-    from eoreader_spark.operators import raster
-
-    def gen(it: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        from eoreader_spark import codecs as _c
-
-        for pdf in it:
-            rows = []
-            for j in pdf["id"].astype("int64"):
-                j = int(j)
-                h, w = (64, 64) if j % 2 == 0 else (128, 64)
-                img = _c.make_image(j, h, w, planes=3)
-                rows.append((f"jp2_{j:03d}", _c.encode(img, "jp2"), w, h, "jp2"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
-
-    images = spark.range(6, numPartitions=2).mapInPandas(
-        gen, schema="image_id string, bytes binary, w int, h int, fmt string"
-    )
-    tiles = raster.tiles_from_images(images, plane=1)  # GREEN plane via JP2
-    s = F.aggregate(
-        F.expr("transform(px, v -> cast(v as bigint))"),
-        F.lit(0).cast("long"), lambda a, x: a + x,
-    )
-    return (
-        tiles.select("image_id", F.size("px").cast("long").alias("n"), s.alias("s"))
-        .groupBy("image_id")
-        .agg(F.sum("n").alias("n_px"), F.sum("s").alias("px_sum"))
-        .orderBy("image_id")
-    )
+    return _green_px_sum(spark, "jp2_", lambda img, j: (codecs.encode(img, "jp2"), "jp2"))
 
 
 def q_audio_info(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4077,28 +3917,21 @@ def q_clean_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle's hypotenuse has slope -21/20, so 21x + 20y never hits its
     non-integer offset), making even-odd membership exact and
     engine-independent; the oracle restates both shapes as inequalities."""
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
-
-    images = datagen.gen_images(spark, 12).filter(F.col("fmt") == "raw8")
     rect = "POLYGON((10.5 8.5, 40.5 8.5, 40.5 30.5, 10.5 30.5, 10.5 8.5))"
     tri = "POLYGON((5.5 40.5, 25.5 40.5, 5.5 61.5, 5.5 40.5))"
-    vm = images.selectExpr(
+    eng = _gate_engine(spark)
+    eng.vector_masks = eng.images.selectExpr(
         "image_id", f"explode(array('{rect}', '{tri}')) as wkt"
     )
-    eng = loader.ImageEngine(images, vector_masks=vm)
     wide = eng.load(["RED"], clean="vector", reflectance=False)
     masked = F.filter("px_RED", lambda x: F.isnan(x))
     valid = F.filter("px_RED", lambda x: ~F.isnan(x))
-    vsum = F.aggregate(
-        valid, F.lit(0).cast("long"), lambda a, x: a + x.cast("long")
-    )
     return (
         wide.select(
             "image_id",
             F.size("px_RED").cast("long").alias("n"),
             F.size(masked).cast("long").alias("m"),
-            vsum.alias("s"),
+            _arr_sum(valid).alias("s"),
         )
         .groupBy("image_id")
         .agg(
@@ -4108,6 +3941,83 @@ def q_clean_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("image_id")
     )
+
+
+# geocode gate -> {band: (a, b, m)}: the band's swath value at (line,
+# sample) is (a*line + b*sample) % m
+_GEOCODE_BANDS = {
+    "geocode_bilinear": {"value": (13, 7, 50)},
+    "geocode_lut": {"b1": (13, 7, 50), "b2": (5, 11, 37)},
+}
+
+
+def _geocode_gate(spark: SparkSession, name: str, geocode) -> DataFrame:
+    """The geocode gates' shared fixture: a 64-point sheared-parallelogram
+    swath (lon = s/4 + l/16, lat = l/4, one column per band of
+    `_GEOCODE_BANDS[name]`) and 81 grid targets at dyadic cell offsets (du,
+    dv in {1/4, 1/2, 3/4}) of lines/samples {0, 2, 5}; geocode(swath, grid)
+    -> rows (grid_id, <bands>, u, v), each rounded to 6dp."""
+    bands = _GEOCODE_BANDS[name]
+    swath = spark.range(64).selectExpr(
+        "cast(id div 8 as int) as line",
+        "cast(id % 8 as int) as sample",
+        "(id % 8) * 0.25 + (id div 8) * 0.0625 as lon",
+        "(id div 8) * 0.25 as lat",
+        *[
+            f"cast(({a} * (id div 8) + {b} * (id % 8)) % {m} as double) as {c}"
+            for c, (a, b, m) in bands.items()
+        ],
+    )
+    grid = spark.range(81).selectExpr(
+        "element_at(array(0, 2, 5), cast(id div 27 as int) + 1) as l",
+        "element_at(array(0, 2, 5), cast((id div 9) % 3 as int) + 1) as s",
+        "(cast(id div 3 as int) % 3 + 1) * 0.25 as du",
+        "(cast(id as int) % 3 + 1) * 0.25 as dv",
+    ).selectExpr(
+        "concat('g', l, '_', s, '_', cast(du * 4 as int), '_', cast(dv * 4 as int)) as grid_id",
+        # P = A + du*e + dv*f on the sheared grid
+        "s * 0.25 + l * 0.0625 + du * 0.25 + dv * 0.0625 as lon",
+        "l * 0.25 + dv * 0.25 as lat",
+    )
+    out = geocode(swath, grid)
+    return out.select(
+        "grid_id", *[F.round(c, 6).alias(c) for c in (*bands, "u", "v")]
+    ).orderBy("grid_id")
+
+
+def _geocode_oracle(name: str) -> str:
+    """Closed-form twin of `_geocode_gate`: the recovered (u, v) ARE the
+    construction offsets and each band is the 4-corner blend of its integer
+    corner values with dyadic weights."""
+    blends = "".join(
+        f"""
+                       (1 - du) * (1 - dv) * (({a} * l + {b} * s) % {m})
+                     + du * (1 - dv) * (({a} * l + {b} * (s + 1)) % {m})
+                     + (1 - du) * dv * (({a} * (l + 1) + {b} * s) % {m})
+                     + du * dv * (({a} * (l + 1) + {b} * (s + 1)) % {m}) AS {c},"""
+        for c, (a, b, m) in _GEOCODE_BANDS[name].items()
+    )
+    rounded = [f"round({c}, 6) AS {c}" for c in (*_GEOCODE_BANDS[name], "u", "v")]
+    select = ",\n                   ".join(
+        ", ".join(rounded[i : i + 2]) for i in range(0, len(rounded), 2)
+    )
+    return f"""
+            WITH ls(l) AS (VALUES (0), (2), (5)),
+            ss(s) AS (VALUES (0), (2), (5)),
+            offs(o) AS (VALUES (0.25), (0.5), (0.75)),
+            t AS (
+                SELECT l.l, s.s, du.o AS du, dv.o AS dv
+                FROM ls l, ss s, offs du, offs dv
+            ),
+            v AS (
+                SELECT concat('g', l, '_', s, '_', cast(du * 4 AS INTEGER),
+                              '_', cast(dv * 4 AS INTEGER)) AS grid_id,{blends}
+                       du AS u, dv AS v
+                FROM t
+            )
+            SELECT grid_id, {select}
+            FROM v ORDER BY grid_id
+        """
 
 
 def q_geocode_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4121,31 +4031,7 @@ def q_geocode_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     dyadic rational; the oracle restates the closed form."""
     from eoreader_spark.operators import warp
 
-    swath = spark.range(64).selectExpr(
-        "cast(id div 8 as int) as line",
-        "cast(id % 8 as int) as sample",
-        "(id % 8) * 0.25 + (id div 8) * 0.0625 as lon",
-        "(id div 8) * 0.25 as lat",
-        "cast((13 * (id div 8) + 7 * (id % 8)) % 50 as double) as value",
-    )
-    grid = spark.range(81).selectExpr(
-        "element_at(array(0, 2, 5), cast(id div 27 as int) + 1) as l",
-        "element_at(array(0, 2, 5), cast((id div 9) % 3 as int) + 1) as s",
-        "(cast(id div 3 as int) % 3 + 1) * 0.25 as du",
-        "(cast(id as int) % 3 + 1) * 0.25 as dv",
-    ).selectExpr(
-        "concat('g', l, '_', s, '_', cast(du * 4 as int), '_', cast(dv * 4 as int)) as grid_id",
-        # P = A + du*e + dv*f on the sheared grid
-        "s * 0.25 + l * 0.0625 + du * 0.25 + dv * 0.0625 as lon",
-        "l * 0.25 + dv * 0.25 as lat",
-    )
-    out = warp.geocode_swath_bilinear(swath, grid)
-    return out.select(
-        "grid_id",
-        F.round("value", 6).alias("value"),
-        F.round("u", 6).alias("u"),
-        F.round("v", 6).alias("v"),
-    ).orderBy("grid_id")
+    return _geocode_gate(spark, "geocode_bilinear", warp.geocode_swath_bilinear)
 
 
 def q_geocode_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4160,33 +4046,11 @@ def q_geocode_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from eoreader_spark.operators import warp
 
-    swath = spark.range(64).selectExpr(
-        "cast(id div 8 as int) as line",
-        "cast(id % 8 as int) as sample",
-        "(id % 8) * 0.25 + (id div 8) * 0.0625 as lon",
-        "(id div 8) * 0.25 as lat",
-        "cast((13 * (id div 8) + 7 * (id % 8)) % 50 as double) as b1",
-        "cast((5 * (id div 8) + 11 * (id % 8)) % 37 as double) as b2",
-    )
-    grid = spark.range(81).selectExpr(
-        "element_at(array(0, 2, 5), cast(id div 27 as int) + 1) as l",
-        "element_at(array(0, 2, 5), cast((id div 9) % 3 as int) + 1) as s",
-        "(cast(id div 3 as int) % 3 + 1) * 0.25 as du",
-        "(cast(id as int) % 3 + 1) * 0.25 as dv",
-    ).selectExpr(
-        "concat('g', l, '_', s, '_', cast(du * 4 as int), '_', cast(dv * 4 as int)) as grid_id",
-        "s * 0.25 + l * 0.0625 + du * 0.25 + dv * 0.0625 as lon",
-        "l * 0.25 + dv * 0.25 as lat",
-    )
-    lut = warp.geocode_bilinear_lut(swath, grid)
-    out = warp.geocode_apply_lut(lut, swath, value_cols=("b1", "b2"))
-    return out.select(
-        "grid_id",
-        F.round("b1", 6).alias("b1"),
-        F.round("b2", 6).alias("b2"),
-        F.round("u", 6).alias("u"),
-        F.round("v", 6).alias("v"),
-    ).orderBy("grid_id")
+    def geocode(swath: DataFrame, grid: DataFrame) -> DataFrame:
+        lut = warp.geocode_bilinear_lut(swath, grid)
+        return warp.geocode_apply_lut(lut, swath, value_cols=("b1", "b2"))
+
+    return _geocode_gate(spark, "geocode_lut", geocode)
 
 
 _RLEE_SPEC = [
@@ -4286,32 +4150,9 @@ def q_olci_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     container (fmt='nc', sources/hdf5.py — the reference's actual S3 band
     format, s3_product.py:788-886) instead of the raw8 stand-in; the
     closed-form oracle is unchanged because the container is lossless."""
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
-
-    images = datagen.transcode_images(
-        datagen.gen_images(spark, 12, layout="S3_OLCI").filter(
-            F.col("fmt") == "raw8"
-        ),
-        "nc",
-    )
-    eng = loader.ImageEngine(images, band_map="S3_OLCI")
+    eng = _gate_engine(spark, "S3_OLCI", fmt="nc")
     wide = eng.load(["NDVI", "Oa21", "NARROW_NIR"], clean="raw")
-
-    def ssum(col):
-        scaled = F.transform(col, lambda x: F.floor(x * 10000).cast("long"))
-        return F.sum(F.aggregate(scaled, F.lit(0).cast("long"), lambda a, x: a + x))
-
-    return (
-        wide.groupBy("image_id")
-        .agg(
-            F.sum(F.size("px_NDVI")).cast("long").alias("n_px"),
-            ssum("px_NDVI").alias("ndvi_ssum"),
-            ssum("px_Oa21").alias("oa21_ssum"),
-            ssum("px_NARROW_NIR").alias("nnir_ssum"),
-        )
-        .orderBy("image_id")
-    )
+    return _ssum_stats(wide, {"NDVI": "ndvi_ssum", "Oa21": "oa21_ssum", "NARROW_NIR": "nnir_ssum"})
 
 
 def q_nc_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4401,28 +4242,9 @@ def q_maxar_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     plane like the reference's shared file id (vantor_product.py:1209-1222)
     — and reduce to floor-scaled integer sums the oracle replays from the
     closed-form pixel function."""
-    from eoreader_spark import datagen
-    from eoreader_spark.plans import loader
-
-    images = datagen.gen_images(spark, 12, layout="MAXAR_MUL").filter(
-        F.col("fmt") == "raw8"
-    )
-    eng = loader.ImageEngine(images, band_map="MAXAR")
-    wide = eng.load(["NDVI", "YELLOW", "NARROW_NIR"], clean="raw")
-
-    def ssum(col):
-        scaled = F.transform(col, lambda x: F.floor(x * 10000).cast("long"))
-        return F.sum(F.aggregate(scaled, F.lit(0).cast("long"), lambda a, x: a + x))
-
-    return (
-        wide.groupBy("image_id")
-        .agg(
-            F.sum(F.size("px_NDVI")).cast("long").alias("n_px"),
-            ssum("px_NDVI").alias("ndvi_ssum"),
-            ssum("px_YELLOW").alias("yellow_ssum"),
-            ssum("px_NARROW_NIR").alias("nnir_ssum"),
-        )
-        .orderBy("image_id")
+    wide = _gate_engine(spark, "MAXAR").load(["NDVI", "YELLOW", "NARROW_NIR"], clean="raw")
+    return _ssum_stats(
+        wide, {"NDVI": "ndvi_ssum", "YELLOW": "yellow_ssum", "NARROW_NIR": "nnir_ssum"}
     )
 
 
@@ -5182,23 +5004,8 @@ def oracle_sql() -> dict[str, str]:
         # y*17 + (x*y)%29) % 256 over generate_series.  Image dims are the
         # deterministic datagen.image_dims values for the 6 raw8 seeds.
         # S2_L2A plane order: NIR=plane 7, SWIR_2=plane 11 (bands.LAYOUTS).
-        "nbr_stats": """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000002', 2, 64, 64),
-                ('img000000000004', 4, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000008', 8, 256, 128),
-                ('img000000000010', 10, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       ((seed*7 + 7*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS nr,
-                       ((seed*7 + 11*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS sr
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            ),
+        "nbr_stats": _px_sql(_RAW8_MS_IMGS_SQL, """((seed*7 + 7*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS nr,
+                       ((seed*7 + 11*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS sr""") + """,
             v AS (
                 SELECT image_id,
                        cast(floor((nr - sr) / (nr + sr + 1e-12) * 10000) AS BIGINT) AS s
@@ -5211,22 +5018,7 @@ def oracle_sql() -> dict[str, str]:
                    max(s) AS nbr_scaled_max
             FROM v GROUP BY image_id ORDER BY image_id
         """,
-        "scl_hist": """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000002', 2, 64, 64),
-                ('img000000000004', 4, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000008', 8, 256, 128),
-                ('img000000000010', 10, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       ((seed*7 + x*13 + y*17 + (x*y) % 29) % 256) AS p0
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            ),
+        "scl_hist": _px_sql(_RAW8_MS_IMGS_SQL, "((seed*7 + x*13 + y*17 + (x*y) % 29) % 256) AS p0") + """,
             scl AS (
                 SELECT image_id,
                        CASE WHEN p0 % 97 = 0 THEN 0
@@ -5419,7 +5211,9 @@ def oracle_sql() -> dict[str, str]:
         "collocate": _collocate_oracle(),
         "stencil_custom": _stencil_custom_oracle(),
         "dem_attach": _dem_attach_oracle(),
-        "geotiff_read": _geotiff_oracle(),
+        "geotiff_read": _green_px_sum_oracle(
+            "tif", "(seed*7 + 31 + x*13 + y*17 + (x*y) % 29) % 256"
+        ),
         "jfif_decode": _jfif_oracle("jfif"),
         "jp2_overview": _jp2_overview_oracle(),
         "jp2_lossy": _jp2_lossy_oracle(),
@@ -5648,22 +5442,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         # jp2_decode: lossless -> same closed-form replay as geotiff_read,
         # plane 1 (GREEN)
-        "jp2_decode": """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('jp2_000', 0, 64, 64), ('jp2_001', 1, 128, 64),
-                ('jp2_002', 2, 64, 64), ('jp2_003', 3, 128, 64),
-                ('jp2_004', 4, 64, 64), ('jp2_005', 5, 128, 64)),
-            px AS (
-                SELECT image_id,
-                       (seed*7 + 1*31 + x*13 + y*17 + (x*y) % 29) % 256 AS v
-                FROM imgs,
-                     generate_series(0, 127) AS gy(y),
-                     generate_series(0, 63) AS gx(x)
-                WHERE y < h AND x < w
-            )
-            SELECT image_id, count(*) AS n_px, cast(sum(v) AS BIGINT) AS px_sum
-            FROM px GROUP BY image_id ORDER BY image_id
-        """,
+        "jp2_decode": _green_px_sum_oracle(
+            "jp2_", "(seed*7 + 1*31 + x*13 + y*17 + (x*y) % 29) % 256"
+        ),
         # video_feats: independent single-process MJPEG demux+decode replay
         "video_feats": _video_oracle("video_feats"),
         "jp2_rate": _jp2_rate_oracle(),
@@ -5695,22 +5476,9 @@ def oracle_sql() -> dict[str, str]:
         # clean_vector: rect + triangle membership as pure inequalities
         # (half-integer edges, hypotenuse slope -21/20 -> no lattice point
         # ever on an edge; see q_clean_vector)
-        "clean_vector": """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000003', 3, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000009', 9, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       (seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS v,
+        "clean_vector": _px_sql(_RAW8_IMGS_SQL, """(seed*7 + x*13 + y*17 + (x*y) % 29) % 256 AS v,
                        (x BETWEEN 11 AND 40 AND y BETWEEN 9 AND 30)
-                       OR (x >= 6 AND y >= 41 AND 42*x + 40*y <= 2690) AS masked
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
+                       OR (x >= 6 AND y >= 41 AND 42*x + 40*y <= 2690) AS masked""") + """
             SELECT image_id,
                    count(*) AS n_px,
                    cast(sum(CASE WHEN masked THEN 1 ELSE 0 END) AS BIGINT) AS n_masked,
@@ -5785,23 +5553,14 @@ def oracle_sql() -> dict[str, str]:
         # nc_read: closed-form replay of the HDF5/netCDF mask_and_scale read
         # (RED=Oa08 plane 7, NIR=Oa17 plane 16; DN==0 written as _FillValue;
         # floor((v*0.25+1.5)*100) = 25*v+150, exact in binary)
-        "nc_read": """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
+        "nc_read": _px_sql("""(VALUES
                 ('nc_000', 0, 64, 64),
                 ('nc_001', 1, 128, 64),
                 ('nc_002', 2, 96, 80),
                 ('nc_003', 3, 64, 64),
                 ('nc_004', 4, 128, 64),
-                ('nc_005', 5, 96, 80)),
-            px AS (
-                SELECT image_id,
-                       (seed*7 + 7*31 + x*13 + y*17 + (x*y) % 29) % 256 AS rd,
-                       (seed*7 + 16*31 + x*13 + y*17 + (x*y) % 29) % 256 AS nr
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
+                ('nc_005', 5, 96, 80))""", """(seed*7 + 7*31 + x*13 + y*17 + (x*y) % 29) % 256 AS rd,
+                       (seed*7 + 16*31 + x*13 + y*17 + (x*y) % 29) % 256 AS nr""") + """
             SELECT image_id,
                    count(*) AS n_px,
                    cast(sum(CASE WHEN rd = 0 THEN 1 ELSE 0 END) AS BIGINT) AS red_fill,
@@ -5812,24 +5571,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         # olci_load: closed-form replay over OLCI plane ids (RED=Oa08 plane
         # 7, NIR=Oa17 plane 16, Oa21 plane 20); reflectance = v/255
-        "olci_load": """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000002', 2, 64, 64),
-                ('img000000000004', 4, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000008', 8, 256, 128),
-                ('img000000000010', 10, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       ((seed*7 + 16*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS nr,
+        "olci_load": _px_sql(_RAW8_MS_IMGS_SQL, """((seed*7 + 16*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS nr,
                        ((seed*7 + 7*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS rd,
-                       ((seed*7 + 20*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS oa
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            )
+                       ((seed*7 + 20*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS oa""") + """
             SELECT image_id, count(*) AS n_px,
                    cast(sum(cast(floor((nr - rd) / (nr + rd + 1e-12) * 10000) AS BIGINT)) AS BIGINT) AS ndvi_ssum,
                    cast(sum(cast(floor(oa * 10000) AS BIGINT)) AS BIGINT) AS oa21_ssum,
@@ -5838,24 +5582,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         # maxar_load: replay of the closed-form pixel function over the
         # Maxar 8-band plane ids (YELLOW=3, RED=4, NIR/NARROW_NIR=6)
-        "maxar_load": """
-            WITH imgs(image_id, seed, h, w) AS (VALUES
-                ('img000000000000', 0, 64, 64),
-                ('img000000000002', 2, 64, 64),
-                ('img000000000004', 4, 128, 64),
-                ('img000000000006', 6, 256, 64),
-                ('img000000000008', 8, 256, 128),
-                ('img000000000010', 10, 64, 128)),
-            px AS (
-                SELECT image_id,
-                       ((seed*7 + 3*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS yl,
+        "maxar_load": _px_sql(_RAW8_MS_IMGS_SQL, """((seed*7 + 3*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS yl,
                        ((seed*7 + 4*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS rd,
-                       ((seed*7 + 6*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS nr
-                FROM imgs,
-                     generate_series(0, 255) AS gy(y),
-                     generate_series(0, 255) AS gx(x)
-                WHERE y < h AND x < w
-            ),
+                       ((seed*7 + 6*31 + x*13 + y*17 + (x*y) % 29) % 256) / 255.0 AS nr""") + """,
             v AS (
                 SELECT image_id,
                        cast(floor((nr - rd) / (nr + rd + 1e-12) * 10000) AS BIGINT) AS ndvi_s,
@@ -5924,58 +5653,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT image_id, val, cast(count(*) * (h - 6) AS BIGINT) AS n
             FROM vals GROUP BY image_id, val, h ORDER BY image_id, val
         """,
-        # geocode_bilinear: closed-form restatement — recovered (u, v) ARE
-        # the construction offsets and the value is the 4-corner blend of
-        # the integer corner values with dyadic weights
-        "geocode_bilinear": """
-            WITH ls(l) AS (VALUES (0), (2), (5)),
-            ss(s) AS (VALUES (0), (2), (5)),
-            offs(o) AS (VALUES (0.25), (0.5), (0.75)),
-            t AS (
-                SELECT l.l, s.s, du.o AS du, dv.o AS dv
-                FROM ls l, ss s, offs du, offs dv
-            ),
-            v AS (
-                SELECT concat('g', l, '_', s, '_', cast(du * 4 AS INTEGER),
-                              '_', cast(dv * 4 AS INTEGER)) AS grid_id,
-                       (1 - du) * (1 - dv) * ((13 * l + 7 * s) % 50)
-                     + du * (1 - dv) * ((13 * l + 7 * (s + 1)) % 50)
-                     + (1 - du) * dv * ((13 * (l + 1) + 7 * s) % 50)
-                     + du * dv * ((13 * (l + 1) + 7 * (s + 1)) % 50) AS value,
-                       du AS u, dv AS v
-                FROM t
-            )
-            SELECT grid_id, round(value, 6) AS value, round(u, 6) AS u,
-                   round(v, 6) AS v
-            FROM v ORDER BY grid_id
-        """,
-        # geocode_lut: the two-band LUT-apply restated closed-form — the
-        # LUT's (u, v) are the construction offsets, each band is its own
-        # 4-corner dyadic blend
-        "geocode_lut": """
-            WITH ls(l) AS (VALUES (0), (2), (5)),
-            ss(s) AS (VALUES (0), (2), (5)),
-            offs(o) AS (VALUES (0.25), (0.5), (0.75)),
-            t AS (
-                SELECT l.l, s.s, du.o AS du, dv.o AS dv
-                FROM ls l, ss s, offs du, offs dv
-            ),
-            v AS (
-                SELECT concat('g', l, '_', s, '_', cast(du * 4 AS INTEGER),
-                              '_', cast(dv * 4 AS INTEGER)) AS grid_id,
-                       (1 - du) * (1 - dv) * ((13 * l + 7 * s) % 50)
-                     + du * (1 - dv) * ((13 * l + 7 * (s + 1)) % 50)
-                     + (1 - du) * dv * ((13 * (l + 1) + 7 * s) % 50)
-                     + du * dv * ((13 * (l + 1) + 7 * (s + 1)) % 50) AS b1,
-                       (1 - du) * (1 - dv) * ((5 * l + 11 * s) % 37)
-                     + du * (1 - dv) * ((5 * l + 11 * (s + 1)) % 37)
-                     + (1 - du) * dv * ((5 * (l + 1) + 11 * s) % 37)
-                     + du * dv * ((5 * (l + 1) + 11 * (s + 1)) % 37) AS b2,
-                       du AS u, dv AS v
-                FROM t
-            )
-            SELECT grid_id, round(b1, 6) AS b1, round(b2, 6) AS b2,
-                   round(u, 6) AS u, round(v, 6) AS v
-            FROM v ORDER BY grid_id
-        """,
+        "geocode_bilinear": _geocode_oracle("geocode_bilinear"),
+        "geocode_lut": _geocode_oracle("geocode_lut"),
     }

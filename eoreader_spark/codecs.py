@@ -248,7 +248,7 @@ def decode_jpeg(data: bytes, h: int | None = None, w: int | None = None) -> np.n
 
 def encode_tiff(img: np.ndarray) -> bytes:
     """REAL GeoTIFF container (uncompressed planar, pure-numpy writer —
-    sources/geotiff.py); the codec seam's first real container format."""
+    sources/geotiff.py); the codec table's first real container format."""
     from eoreader_spark.sources import geotiff
 
     return geotiff.encode_geotiff(img)
@@ -318,17 +318,6 @@ _DECODERS = {"raw8": decode_raw8, "png": decode_png, "jpeg": decode_jpeg, "tiff"
              "jfif": decode_jfif, "jp2": decode_jp2, "nc": decode_nc}
 
 
-def register_codec(fmt: str, encoder, decoder) -> None:
-    """Pluggable-codec seam (VERDICT round 1: keep the decode layer open for
-    real GeoTIFF/JP2 codecs when rasterio/libjpeg exist).  ``encoder(img) ->
-    bytes``; ``decoder(data, h, w) -> (planes, h, w) uint8``.  Registration
-    is module-level, so do it at import time of your plugin module — Spark
-    executors re-import modules, and the decode UDFs capture the codec by
-    fmt NAME, resolving through this table on the worker."""
-    _ENCODERS[fmt] = encoder
-    _DECODERS[fmt] = decoder
-
-
 def encode(img: np.ndarray, fmt: str) -> bytes:
     return _ENCODERS[fmt](img)
 
@@ -336,7 +325,7 @@ def encode(img: np.ndarray, fmt: str) -> bytes:
 def decode(data: bytes, fmt: str, h: int, w: int) -> np.ndarray:
     """-> (planes, h, w) in the container's native dtype (uint8, or uint16
     for 16-bit GeoTIFF/JP2 — S2 DNs are uint16).  Malformed bytes raise a
-    named ValueError for ANY registered codec (corrupt_guard), so ingest
+    named ValueError for ANY codec in the table (corrupt_guard), so ingest
     jobs can quarantine bad rows without losing the batch."""
     dec = _DECODERS[fmt]
     return corrupt_guard(fmt)(dec)(data, h, w)

@@ -803,20 +803,6 @@ def encode_codeblock_segments(
     return segs, numbps
 
 
-def encode_codeblock(
-    coeffs: np.ndarray, band: str, cb_style: int = 0
-) -> tuple[bytes, int, int]:
-    """Code-block int coefficients -> (codeword bytes, numbps, n_passes) —
-    the concatenation of all codeword segments (exactly one for styles
-    without termall/bypass).  See encode_codeblock_segments."""
-    segs, numbps = encode_codeblock_segments(coeffs, band, cb_style)
-    return (
-        b"".join(b for b, _p in segs),
-        numbps,
-        sum(p for _b, p in segs),
-    )
-
-
 def decode_codeblock_segments(
     segs: list[tuple[bytes, int]], h: int, w: int, band: str, numbps: int,
     cb_style: int = 0,
@@ -980,16 +966,6 @@ def decode_codeblock_segments(
     neg = (st.sgn[1 : h + 1, 1 : w + 1] == 1) & (mag > 0)
     out[neg] = -out[neg]
     return out
-
-
-def decode_codeblock(
-    data: bytes, h: int, w: int, band: str, numbps: int, cb_style: int = 0
-) -> np.ndarray:
-    """Inverse of encode_codeblock for a SINGLE continuous codeword
-    (styles without termall/bypass) -> int64 coefficients."""
-    return decode_codeblock_segments(
-        [(data, 3 * numbps - 2)], h, w, band, numbps, cb_style
-    )
 
 
 # ---------------------------------------------------------------- Tier-2

@@ -691,8 +691,8 @@ def _decode_scan(
     Table-driven: one 40-bit peek (5-byte slice -> int) serves both the
     Huffman code (one LUT hit resolves symbol + length) and its magnitude
     field — 5x the bit-by-bit reader this replaced (measured 394 -> 79 ms
-    on a 3x256x128 image).  Production bulk decode would register libjpeg
-    through the codec seam; this pure-python path is the correctness-grade
+    on a 3x256x128 image).  Production bulk decode would put libjpeg in
+    the codec table; this pure-python path is the correctness-grade
     fallback."""
     buf = data + b"\x00\x00\x00\x00\x00"  # peek overrun guard past the last code
     dc_sym, dc_len = dc_lut

@@ -17,11 +17,14 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    # heap capped at half the host's RAM: with get_spark's 48g default the
-    # suite's long-lived JVM outgrows a small host's physical memory and
-    # the kernel kills it mid-suite, failing every later Spark test
+    # the suite runs at the host's core count ($SPARK_GRAFT_CPUS, else every
+    # core); get_spark derives the shuffle partitions from it.  Heap capped
+    # at half the host's RAM: with get_spark's 48g default the suite's
+    # long-lived JVM outgrows a small host's physical memory and the kernel
+    # kills it mid-suite, failing every later Spark test
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
-    s = get_spark("eoreader_spark_tests", cpus=8, shuffle_partitions=8,
+    s = get_spark("eoreader_spark_tests", cpus=cpus,
                   extra_conf={"spark.driver.memory": f"{min(48, max(2, ram_gb // 2))}g"})
     yield s
 

@@ -80,28 +80,3 @@ def test_png_decoder_handles_filters():
         + codecs._chunk(b"IEND", b"")
     )
     assert np.array_equal(codecs.decode_png(data), img)
-
-
-def test_register_codec_seam():
-    """The decode layer is pluggable (swap in rasterio-backed GeoTIFF/JP2
-    when the libs exist): a registered codec round-trips through the public
-    encode/decode entry points."""
-    import numpy as np
-
-    from eoreader_spark import codecs
-
-    def enc(img):
-        return b"XOR!" + (np.asarray(img, np.uint8) ^ 0xFF).tobytes()
-
-    def dec(data, h, w):
-        assert data[:4] == b"XOR!"
-        arr = np.frombuffer(data[4:], dtype=np.uint8) ^ 0xFF
-        return arr.reshape(-1, h, w)
-
-    codecs.register_codec("xor8", enc, dec)
-    try:
-        img = codecs.make_image(3, 16, 24, planes=5)
-        out = codecs.decode(codecs.encode(img, "xor8"), "xor8", 16, 24)
-        assert np.array_equal(out, img)
-    finally:
-        del codecs._ENCODERS["xor8"], codecs._DECODERS["xor8"]

@@ -40,8 +40,8 @@ def test_codeblock_roundtrip_all_bands():
     for band in ("LL", "HL", "LH", "HH"):
         c = np.zeros((30, 22), dtype=np.int64)
         c[rng.rand(30, 22) < 0.2] = rng.randint(-500, 500)
-        data, numbps, _n = jp2.encode_codeblock(c, band)
-        assert np.array_equal(jp2.decode_codeblock(data, 30, 22, band, numbps), c)
+        segs, numbps = jp2.encode_codeblock_segments(c, band)
+        assert np.array_equal(jp2.decode_codeblock_segments(segs, 30, 22, band, numbps), c)
 
 
 @pytest.mark.parametrize(

@@ -50,6 +50,41 @@ def dtype_kind(dt) -> str:
     return {"u": "i"}.get(k, k)
 
 
+def compare(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
+    """None when two normalized results agree, else what differs first:
+    the column names, the row count, a column's dtype kind, or a value
+    (ints, strings and bools compared exactly, floats bit-exactly with
+    NaN == NaN)."""
+    if list(got.columns) != list(want.columns):
+        return f"columns {list(got.columns)} != {list(want.columns)}"
+    if len(got) != len(want):
+        return f"rows {len(got)} != {len(want)}"
+    kind_bad = [
+        c for c in got.columns
+        if dtype_kind(got[c].dtype) != dtype_kind(want[c].dtype)
+    ]
+    if kind_bad:
+        detail = ", ".join(
+            f"{c}: spark {got[c].dtype} vs duckdb {want[c].dtype}" for c in kind_bad
+        )
+        return f"dtype kind mismatch ({detail})"
+    for c in got.columns:
+        a, b = got[c].to_numpy(), want[c].to_numpy()
+        if a.dtype.kind in "OUSb" or np.dtype(a.dtype).kind in "iu":
+            # exact compare for ints: a float64 round-trip would mask
+            # low-bit differences above 2^53 (60-bit signature columns)
+            eq = a == b
+        else:
+            eq = np.isclose(
+                a.astype(np.float64), b.astype(np.float64),
+                rtol=0, atol=0, equal_nan=True,
+            )
+        if not np.all(eq):
+            i = int(np.argmin(eq))
+            return f"col {c} row {i}: {a[i]!r} != {b[i]!r}"
+    return None
+
+
 def main(sf_dir: str, only: set[str] | None = None) -> int:
     spark = get_spark("oracle_check", cpus=8, shuffle_partitions=8)
     con = duckdb.connect()
@@ -77,41 +112,7 @@ def main(sf_dir: str, only: set[str] | None = None) -> int:
             print(f"FAIL {name}: duckdb error: {e}")
             failures += 1
             continue
-        if list(got.columns) != list(want.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}")
-            failures += 1
-            continue
-        if len(got) != len(want):
-            print(f"FAIL {name}: rows {len(got)} != {len(want)}")
-            failures += 1
-            continue
-        kind_bad = [
-            c for c in got.columns
-            if dtype_kind(got[c].dtype) != dtype_kind(want[c].dtype)
-        ]
-        if kind_bad:
-            detail = ", ".join(
-                f"{c}: spark {got[c].dtype} vs duckdb {want[c].dtype}" for c in kind_bad
-            )
-            print(f"FAIL {name}: dtype kind mismatch ({detail})")
-            failures += 1
-            continue
-        mismatch = None
-        for c in got.columns:
-            a, b = got[c].to_numpy(), want[c].to_numpy()
-            if a.dtype.kind in "OUSb" or np.dtype(a.dtype).kind in "iu":
-                # exact compare for ints: a float64 round-trip would mask
-                # low-bit differences above 2^53 (60-bit signature columns)
-                eq = a == b
-            else:
-                eq = np.isclose(
-                    a.astype(np.float64), b.astype(np.float64),
-                    rtol=0, atol=0, equal_nan=True,
-                )
-            if not np.all(eq):
-                i = int(np.argmin(eq))
-                mismatch = f"col {c} row {i}: {a[i]!r} != {b[i]!r}"
-                break
+        mismatch = compare(got, want)
         if mismatch:
             print(f"FAIL {name}: {mismatch}")
             failures += 1
