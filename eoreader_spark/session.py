@@ -4,10 +4,17 @@ same conf works on a multi-executor cluster (AQE, Arrow, adaptive skew-join).
 
 from __future__ import annotations
 
+import atexit
 import functools
+import hashlib
 import os
+import re
+import shutil
+import subprocess
 from pathlib import Path
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -19,6 +26,13 @@ from pyspark.sql.types import StructType
 CODEGEN_CACHE_ENTRIES = 2000
 # inferred parquet schemas kept by read_parquet, one per (file, version)
 SCHEMA_CACHE_ENTRIES = 256
+# The driver JVM's class-data archive (JEP 350): the ~15k Spark and Scala
+# classes a session start loads, mapped from one file instead of read from
+# jars.  Outside checkouts and temp dirs, which benchmark runs delete.
+CDS_DIR = Path.home() / ".cache" / "eoreader_spark" / "cds"
+# CDS logging off: the JVM prints dump warnings to stdout after Python exits
+DRIVER_JAVA_OPTIONS = ["-Djava.net.preferIPv4Stack=true", "-Xlog:cds=off", "-Xlog:cds+dynamic=off"]
+CDS_DUMP_WAIT_S = 300  # how long Python's exit waits for the JVM to write it
 
 
 def get_spark(
@@ -45,6 +59,15 @@ def get_spark(
     ``eoreader_spark.worker_daemon`` (see :func:`worker_daemon_conf`)."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    heap = ((extra_conf or {}).get("spark.driver.memory")
+            or os.environ.get("SPARK_DRIVER_MEM", "48g"))
+    java = shutil.which("java")
+    java_home = os.environ.get("JAVA_HOME") or (java and str(Path(java).resolve().parents[1]))
+    cds_opts: list[str] = []
+    fresh = SparkContext._gateway is None
+    if fresh and java_home:  # JVM options are fixed once it runs
+        cds_opts, env = cds_options(_find_spark_home(), java_home, os.environ, CDS_DIR, heap)
+        os.environ.update(env)
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
@@ -84,9 +107,11 @@ def get_spark(
         # a static conf: it must be set here, before the SparkContext starts
         # (spark.conf.set cannot change it on a running session)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        # not extraJavaOptions: callers set that one, and Spark appends it
+        # after this, so both survive
+        .config("spark.driver.defaultJavaOptions", " ".join(DRIVER_JAVA_OPTIONS + cds_opts))
         .config(map=worker_daemon_conf())
     )
     if master.startswith("local-cluster"):
@@ -107,7 +132,68 @@ def get_spark(
             b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    dump = [Path(o.split("=", 1)[1]) for o in cds_opts
+            if o.startswith("-XX:ArchiveClassesAtExit=")]
+    if fresh and SparkContext._gateway.proc:  # our own handle: callers may clear _gateway
+        atexit.register(publish_cds, SparkContext._gateway.proc, dump[0] if dump else None)
     return spark
+
+
+def cds_options(spark_home: str, java_home: str, environ, cache_dir: Path,
+                heap: str) -> tuple[list[str], dict[str, str]]:
+    """(driver java options, environment update) for the class-data archive.
+
+    The archive is keyed by the JDK, the jar set and the heap's compressed
+    oops mode (dropped from 32 GiB up; an archive dumped in the other mode
+    is refused).  An existing one is mapped, else the JVM dumps one at exit
+    for :func:`publish_cds`.  The JDK will not archive a classpath holding a
+    non-empty directory, so the conf dir becomes an empty one at a fixed
+    path; nothing is done when the user picked the conf dir, its default
+    holds more than templates, or the JVM is spark-submit's."""
+    conf_dir, conf = Path(cache_dir) / "conf", Path(spark_home) / "conf"
+    if (environ.get("SPARK_CONF_DIR") not in (None, str(conf_dir))
+            or "PYSPARK_GATEWAY_PORT" in environ
+            or conf.is_dir() and any(not p.name.endswith(".template") for p in conf.iterdir())):
+        return [], {}
+    try:
+        conf_dir.mkdir(parents=True, exist_ok=True)
+    except OSError:
+        return [], {}
+    h = hashlib.sha256(os.path.realpath(java_home).encode())
+    release = Path(java_home) / "release"
+    h.update(release.read_bytes() if release.is_file() else b"")
+    for jar in sorted((Path(spark_home) / "jars").glob("*.jar")):
+        st = jar.stat()
+        h.update(f"{jar.name} {st.st_size} {st.st_mtime_ns}\n".encode())
+    num, unit = re.fullmatch(r"(\d+)([kmgtp]?)b?", heap.strip().lower()).groups()
+    coops = int(num) << {"k": 10, "": 20, "m": 20, "g": 30, "t": 40, "p": 50}[unit] < 32 << 30
+    jsa = Path(cache_dir) / f"{h.hexdigest()[:16]}-{'coops' if coops else 'nocoops'}.jsa"
+    flag = (f"-XX:SharedArchiveFile={jsa}" if jsa.is_file()
+            else f"-XX:ArchiveClassesAtExit={jsa}.{os.getpid()}.tmp")
+    return [flag], {"SPARK_CONF_DIR": str(conf_dir)}
+
+
+def publish_cds(proc, tmp: Path | None) -> None:
+    """At exit, stop the driver JVM and wait for it, so it never outlives
+    Python.  When it dumps to ``tmp``, publish the archive by rename, so no
+    half-written file is ever a ``.jsa``, and drop other JDKs' or jar sets'
+    archives and every other ``.tmp`` (a killed run's, or a concurrent dump
+    this one makes redundant)."""
+    sc = SparkContext._active_spark_context
+    if sc is not None and getattr(sc._gateway, "proc", None) is proc:
+        sc.stop()  # else its Python-side servers see the JVM's EOFs
+    if proc.stdin:
+        proc.stdin.close()
+    try:
+        if proc.wait(timeout=CDS_DUMP_WAIT_S) != 0 or tmp is None or not tmp.is_file():
+            return
+    except subprocess.TimeoutExpired:
+        return
+    jsa = tmp.with_suffix("").with_suffix("")
+    os.replace(tmp, jsa)
+    for p in jsa.parent.iterdir():
+        if p.suffix == ".tmp" or p.suffix == ".jsa" and p.name[:16] != jsa.name[:16]:
+            p.unlink(missing_ok=True)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -30,6 +30,15 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def oracles() -> dict[str, str]:
+    """Every ``oracle_sql()`` text, rendered once for the suite (about 20 s:
+    rendering replays the codecs single-process).  Needs no Spark."""
+    import __spark_entry__
+
+    return __spark_entry__.oracle_sql()
+
+
+@pytest.fixture(scope="session")
 def synth(spark, tmp_path_factory):
     """Small synthetic table set (60 images), materialized once."""
     from eoreader_spark import datagen

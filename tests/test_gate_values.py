@@ -40,11 +40,6 @@ GATE_QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def oracles() -> dict[str, str]:
-    return entrymod.oracle_sql()
-
-
-@pytest.fixture(scope="module")
 def no_tables(tmp_path_factory) -> str:
     return str(tmp_path_factory.mktemp("no_tables"))
 

@@ -1,10 +1,13 @@
 """Fixed per-query costs of a resident session: the parquet schema cache
-of ``session.read_parquet`` and the size of Spark's generated-class cache."""
+of ``session.read_parquet``, the size of Spark's generated-class cache, and
+the decisions behind the driver JVM's class-data archive."""
 
+import os
 from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from eoreader_spark import session
 
@@ -80,3 +83,145 @@ def test_warm_bench_round_does_not_recompile(spark):
             qs[name](spark, SF).collect()
         compiles.append(hist.getCount() - c0)
     assert compiles[-1] < 10, compiles
+
+
+# ------------------------------------------------ driver class-data archive
+@pytest.fixture
+def homes(tmp_path):
+    """(spark_home, java_home, cache_dir) laid out like a real install."""
+    spark_home, java_home = tmp_path / "spark", tmp_path / "jdk"
+    (spark_home / "jars").mkdir(parents=True)
+    (spark_home / "conf").mkdir()
+    (spark_home / "conf" / "spark-defaults.conf.template").write_text("# spark.master x\n")
+    for name in ("spark-core.jar", "scala-library.jar"):
+        (spark_home / "jars" / name).write_bytes(b"PK" + name.encode())
+    java_home.mkdir()
+    (java_home / "release").write_text('JAVA_VERSION="17.0.20"\n')
+    return spark_home, java_home, tmp_path / "cache" / "cds"
+
+
+def _plan(homes, environ=None, heap="48g"):
+    spark_home, java_home, cache = homes
+    return session.cds_options(str(spark_home), str(java_home), environ or {}, cache, heap)
+
+
+def _dump_path(opts) -> Path:
+    (flag,) = opts
+    assert flag.startswith("-XX:ArchiveClassesAtExit="), opts
+    return Path(flag.split("=", 1)[1])
+
+
+def _published(tmp: Path) -> Path:
+    """The archive a dump's ``<jsa>.<pid>.tmp`` becomes."""
+    return Path(str(tmp).rsplit(".", 2)[0])
+
+
+def test_no_archive_dumps_to_a_tmp_file(homes):
+    opts, env = _plan(homes)
+    tmp = _dump_path(opts)
+    assert tmp.name.endswith(f".jsa.{os.getpid()}.tmp") and tmp.parent == homes[2]
+    conf_dir = Path(env["SPARK_CONF_DIR"])
+    assert env == {"SPARK_CONF_DIR": str(homes[2] / "conf")}
+    assert conf_dir.is_dir() and not any(conf_dir.iterdir())
+
+
+def test_existing_archive_is_mapped(homes):
+    jsa = _published(_dump_path(_plan(homes)[0]))
+    jsa.write_bytes(b"archive")
+    opts, env = _plan(homes)
+    assert opts == [f"-XX:SharedArchiveFile={jsa}"]
+    assert env == {"SPARK_CONF_DIR": str(homes[2] / "conf")}
+    # the conf dir this module set itself is not the user's choice
+    assert _plan(homes, env)[0] == opts
+
+
+def test_user_conf_dir_or_real_conf_file_means_no_archive(homes, tmp_path):
+    assert _plan(homes, {"SPARK_CONF_DIR": str(tmp_path)}) == ([], {})
+    assert _plan(homes, {"PYSPARK_GATEWAY_PORT": "4040"}) == ([], {})
+    (homes[0] / "conf" / "spark-defaults.conf").write_text("spark.ui.enabled false\n")
+    assert _plan(homes) == ([], {})
+    assert not homes[2].exists()
+
+
+def test_uncreatable_cache_dir_means_no_archive(homes, tmp_path):
+    (tmp_path / "file").write_text("")
+    spark_home, java_home, _ = homes
+    assert session.cds_options(str(spark_home), str(java_home), {},
+                               tmp_path / "file" / "cds", "48g") == ([], {})
+
+
+def test_key_follows_jars_jdk_and_heap_mode(homes):
+    first = _dump_path(_plan(homes)[0])
+    assert _dump_path(_plan(homes)[0]) == first
+    jar = homes[0] / "jars" / "spark-core.jar"
+    st = jar.stat()
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    moved = _dump_path(_plan(homes)[0])
+    assert moved != first
+    (homes[1] / "release").write_text('JAVA_VERSION="17.0.21"\n')
+    assert _dump_path(_plan(homes)[0]) not in (first, moved)
+    # heaps from 32 GiB up run without compressed oops: their own archive
+    names = {_dump_path(_plan(homes, heap=h)[0]).name.split(".")[0]
+             for h in ("48g", "32g", "31g", "7g", "2048m")}
+    assert sorted(n.split("-")[1] for n in names) == ["coops", "nocoops"]
+
+
+def test_leftover_tmp_is_never_mapped(homes):
+    tmp = _dump_path(_plan(homes)[0])
+    Path(f"{_published(tmp)}.12345.tmp").write_bytes(b"half-written")
+    assert _dump_path(_plan(homes)[0]) == tmp
+
+
+class _Jvm:
+    """A driver JVM that writes its archive only when it exits."""
+
+    def __init__(self, tmp: Path, code: int = 0):
+        self.tmp, self.code, self.stdin_closed = tmp, code, False
+        self.stdin = self
+
+    def close(self):
+        self.stdin_closed = True
+
+    def wait(self, timeout=None):
+        assert self.stdin_closed, "the JVM exits only once its stdin closes"
+        assert not _published(self.tmp).exists(), "published before the JVM finished writing"
+        self.tmp.write_bytes(b"archive")
+        return self.code
+
+
+def test_publish_renames_after_the_wait(homes):
+    tmp = _dump_path(_plan(homes)[0])
+    jsa, cache = _published(tmp), homes[2]
+    other_key = cache / ("0" * 16 + "-coops.jsa")
+    other_mode = cache / (jsa.name[:16] + "-coops.jsa")
+    leftover = cache / (jsa.name + ".12345.tmp")
+    for p in (other_key, other_mode, leftover):
+        p.write_bytes(b"x")
+    session.publish_cds(_Jvm(tmp), tmp)
+    assert jsa.read_bytes() == b"archive" and not tmp.exists()
+    assert not other_key.exists() and not leftover.exists()
+    assert other_mode.exists()
+    assert _plan(homes)[0] == [f"-XX:SharedArchiveFile={jsa}"]
+
+
+def test_failed_jvm_publishes_nothing(homes):
+    tmp = _dump_path(_plan(homes)[0])
+    session.publish_cds(_Jvm(tmp, code=1), tmp)
+    assert _dump_path(_plan(homes)[0]) == tmp
+
+
+def test_mapping_run_only_waits_for_the_jvm(homes):
+    jsa = _published(_dump_path(_plan(homes)[0]))
+    jsa.write_bytes(b"archive")
+    jvm = _Jvm(homes[2] / "unused.tmp")
+    session.publish_cds(jvm, None)
+    assert jvm.stdin_closed and jsa.read_bytes() == b"archive"
+
+
+def test_session_java_options_are_defaults_callers_cannot_drop(spark):
+    # callers pass spark.driver.extraJavaOptions (perfbench: java.io.tmpdir),
+    # which replaces a value of that key; Spark appends it after the defaults
+    conf = spark.sparkContext.getConf()
+    opts = conf.get("spark.driver.defaultJavaOptions").split()
+    assert "-Djava.net.preferIPv4Stack=true" in opts
+    assert spark.sparkContext._jvm.java.lang.System.getProperty("java.net.preferIPv4Stack") == "true"

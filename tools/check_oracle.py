@@ -10,6 +10,7 @@ Usage: python tools/check_oracle.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -86,7 +87,10 @@ def compare(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
 
 
 def main(sf_dir: str, only: set[str] | None = None) -> int:
-    spark = get_spark("oracle_check", cpus=8, shuffle_partitions=8)
+    # the host's core count ($SPARK_GRAFT_CPUS, else every core), as the test
+    # session; get_spark derives the shuffle partitions from it
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = get_spark("oracle_check", cpus=cpus)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
