@@ -545,8 +545,8 @@ class ImageEngine:
                 )
             if {"SLOPE", "HILLSHADE"} & set(plan.dem):
                 # FUSED stencil pass (round 3): SLOPE, HILLSHADE and the raw
-                # DEM share one strips exchange, one halo join, one Arrow
-                # pass — never one exchange + join per derivative
+                # DEM share one exchange and one Arrow pass — never one
+                # exchange + join per derivative
                 kernels: dict = {}
                 if "DEM" in plan.dem:
                     kernels["px_DEM"] = ("px", stencil.center_kernel)

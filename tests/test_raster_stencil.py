@@ -361,6 +361,22 @@ def test_stencil_edge_grids_match_mosaic_reference(spark, case):
         assert not np.isnan(want).any()
 
 
+
+@pytest.mark.parametrize("batch", [4, 7])
+@pytest.mark.parametrize("case", sorted(_EDGE_GRIDS))
+def test_stencil_edge_grids_across_arrow_batches(spark, case, batch):
+    """The same mosaic reference with 4 and 7 rows per Arrow batch: a tile's
+    nine rows (center + 8 strips) straddle batches, and in the hole grid a
+    batch can hold only strips addressed to the missing tile.  The carried
+    tile must still meet all its strips, bit for bit."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(batch))
+    try:
+        test_stencil_edge_grids_match_mosaic_reference(spark, case)
+    finally:
+        spark.conf.set(key, saved)
+
 def test_s2_baseline_offset_and_sun_distance(spark):
     """F2/F4 parity: the baseline-4 DN offset and the ephemeris-free
     Sun-Earth-distance formula reproduce the reference's published

@@ -11,9 +11,9 @@ Stages:
   index      : data-local Python scan -> decode + 5 spectral-index kernels
                (sources/pyscan.py — image bytes never cross the JVM boundary)
   assign     : tiles x AOI cell join + vectorized ray-cast predicate
-  stencil    : slope over DEM tiles (strips-only halo shuffle) — the round-2
-               stencil redesign; exchange volume = edge strips, centers move
-               once via the repartition
+  stencil    : slope over DEM tiles — each tile's center and edge strips
+               cross one exchange on the tile key (centers once, strips
+               ~6% more); the bucketed leg moves only the strips
   cpu_kernel : pure-integer kernel (no large buffers) — isolates the ENGINE's
                task-scheduling scaling from single-box DRAM bandwidth
   native_mp  : the index workload re-run with plain multiprocessing.Pool —
